@@ -1,188 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+/** Per-query timing of the registered queries: min-of-N in one JVM, the
+  * full record written to a file, and one compact JSON line as the last
+  * stdout line. */
 object Bench {
-
-  /** Parse a BENCHFULL artifact's FIRST line into its per-query timing
-    * map (later lines may carry adjudication records — ignored here). */
-  private def readTimings(path: String): Map[String, Double] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val line = scala.io.Source.fromFile(path, "UTF-8").getLines().next()
-    (JsonMethods.parse(line) \ "queries") match {
-      case JObject(fields) => fields.collect {
-        case (k, JDouble(v)) => k -> v
-        case (k, JInt(v)) => k -> v.toDouble
-      }.toMap
-      case _ => Map.empty
-    }
-  }
-
-  /** Parse the canary block out of an artifact's first line (absent on
-    * pre-round-16 artifacts → empty map). */
-  private def readCanaryBlock(path: String): Map[String, Double] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    try {
-      val line = scala.io.Source.fromFile(path, "UTF-8").getLines().next()
-      (JsonMethods.parse(line) \ "canary") match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
-  }
-
-  /** The single scalar by which THIS run's environment differs from the
-    * baseline artifact's: geometric mean of the three canary-component
-    * ratios (current/base). Geometric, not arithmetic — the components
-    * span different magnitudes and a ratio of ratios should compose
-    * symmetrically (a 2× slower host reads 2.0 whichever side is the
-    * baseline). None when either side lacks a canary block. */
-  private def canaryRatio(now: Map[String, Double],
-                          base: Map[String, Double]): Option[Double] = {
-    val keys = now.keySet intersect base.keySet
-    if (keys.isEmpty) None
-    else Some(math.exp(keys.toSeq.map(k =>
-      math.log(now(k) / base(k))).sum / keys.size))
-  }
-
-  /** Re-run a BATCH of queries ISOLATED: one fresh child JVM (same
-    * classpath and module options as this one), min-of-`runs` each, its
-    * own artifact file. This is the round-8/9 bench-drift adjudication
-    * playbook (SCALE.md "Bench-drift adjudication") promoted from an
-    * ad-hoc step into the gate itself: a long 300-query JVM accumulates
-    * JIT/GC/scheduling state that lands ±30% swings on sub-2 s queries,
-    * and the fresh-JVM floor is the number that separates a real
-    * regression from that noise. BATCHED (round-15 change): one child
-    * per query paid ~25 s of JVM+session startup per mover, which is
-    * why rounds 13-14 could only afford isolating 10 of 47 movers —
-    * sharing one child across a dozen movers amortizes the startup so
-    * EVERY >=1.4x mover gets an isolated floor. Returns the child's
-    * per-query timings (empty on failure — adjudication must never fail
-    * the bench run itself). */
-  private def isolatedRun(names: Seq[String], sfDir: String, cpus: String,
-                          runs: Int): Map[String, Double] = {
-    try {
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments
-      val outFile = java.nio.file.Files.createTempFile("bench-iso", ".json")
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(s"${System.getProperty("java.home")}/bin/java")
-      jvmArgs.forEach(a => if (!a.startsWith("-agentlib")) { cmd.add(a); () })
-      cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-      cmd.add("graft.Bench")
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      pb.environment().put("SPARK_GRAFT_ONLY", names.mkString(","))
-      pb.environment().put("SPARK_GRAFT_BENCH_RUNS", runs.toString)
-      pb.environment().put("SPARK_GRAFT_BENCH_FILE", outFile.toString)
-      pb.environment().remove("SPARK_GRAFT_BENCH_BASELINE") // no recursion
-      pb.environment().remove("SPARK_GRAFT_BASELINE_OUT")   // no recursion
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      val p = pb.start()
-      // Timeout scales with the batch (round-16 advice fix): the flat
-      // 8-minute cap was sized for ONE query per child, but a child now
-      // runs up to a dozen movers at min-of-3 — one slow batch would be
-      // killed and ALL its floors silently dropped to isolated:-1,
-      // defeating the no-unmeasured-movers guarantee. 2 min per query
-      // covers ~25 s JVM startup + min-of-3 on multi-second movers.
-      val timeoutMin = math.max(8L, 2L * names.length)
-      val done = p.waitFor(timeoutMin, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) {
-        p.destroyForcibly()
-        java.nio.file.Files.deleteIfExists(outFile)
-        System.err.println(s"BENCH adjudication child timed out " +
-          s"($timeoutMin min) for ${names.mkString(",")}")
-        return Map.empty
-      }
-      val t = readTimings(outFile.toString)
-      java.nio.file.Files.deleteIfExists(outFile)
-      t
-    } catch { case t: Throwable =>
-      System.err.println(s"BENCH adjudication failed for ${names.mkString(",")}: $t")
-      Map.empty
-    }
-  }
-
-  /** Environment canary (round-16 ask #1b): three FIXED calibration
-    * workloads — a shuffle loop, a parquet scan-agg, a window — timed
-    * min-of-3 at round open and recorded in both artifact lines. Every
-    * cross-round per-query ratio can then be env-normalized: rounds
-    * 13-15 each burned adjudication wall-clock proving that 2-3×
-    * "regressions" were the HOST drifting (SCALE.md "bench drift is
-    * partly ENVIRONMENT"), which a fixed workload separates from code
-    * for free. The workloads never change — that is the entire point —
-    * and only `scan` touches sfDir (per-round records run at one sf,
-    * so it stays comparable where comparisons happen). */
-  private def canary(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import org.apache.spark.sql.functions._
-    def timed(body: => Unit): Double = (1 to 3).map { _ =>
-      System.gc()
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.min
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // Iterative join+agg over a generated frame — the pointer-jumping /
-    // PageRank shape that drifted 2-3× across rounds 13-15.
-    val shuffle = timed {
-      var df = spark.range(2000000L)
-        .select(col("id"), (col("id") % 10007).as("k"))
-      (1 to 3).foreach { _ =>
-        val agg = df.groupBy("k").agg(min("id").as("m"))
-        df = df.join(agg, "k")
-          .select(col("id"), ((col("m") + col("id")) % 10007).as("k"))
-      }
-      noop(df.groupBy("k").agg(count(lit(1)).as("n")))
-    }
-    // Full-table parquet scan + aggregate — the IO + codegen-agg shape.
-    val scan = timed {
-      noop(Tables.lineitem(spark, sfDir)
-        .groupBy("l_returnflag")
-        .agg(sum("l_quantity").as("q"), count(lit(1)).as("n")))
-    }
-    // Partitioned window over a generated frame — the sort + state shape.
-    val window = timed {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy(col("id").desc)
-      noop(spark.range(1000000L)
-        .select(col("id"), (col("id") % 1000).as("k"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 3))
-    }
-    // Partitioned parquet store WRITE + partition-pruned read-back —
-    // the index-artifact shape (write*Index / read*Index): fs metadata,
-    // commit protocol, directory listing, cold page cache. Added
-    // round-18: BOTH same-day code_suspect flags (n3b persistent-IVF
-    // probes, d12) were env drift THIS component's resource profile
-    // tracks and the compute canaries don't — the r18 canary_ratio
-    // read 1.06 while store-shaped floors moved 1.7-3×
-    // (ABTEST_r18_n3b_d12.json; same class as r17's t45/x7).
-    val store = timed {
-      val dir = java.nio.file.Files.createTempDirectory("graft_canary_store")
-      try {
-        spark.range(200000L)
-          .select(col("id"), (col("id") % 16).cast("int").as("cell"),
-            (col("id") * 2654435761L % 10007).as("v"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir.toString)
-        noop(spark.read.parquet(dir.toString)
-          .where(col("cell").isin(1, 5, 9))
-          .groupBy("cell").agg(sum("v").as("s"), count(lit(1)).as("n")))
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir.toFile)
-      }
-    }
-    Seq("shuffle" -> shuffle, "scan" -> scan, "window" -> window,
-      "store" -> store)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -201,116 +23,18 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     // Optional comma-separated filter for local iteration on one query.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Baseline-recording mode (round-17, judge ask #2): every selected
-    // query re-timed in FRESH child JVMs (batched a dozen per child,
-    // min-of-3) and written with this session's canary triple as the
-    // host-local isolated baseline. This exists because cross-round
-    // per-query ratios kept paying a 1.5-2.4× "host drift tax" against
-    // baselines recorded in a faster era — rounds 13-16 each burned
-    // adjudication wall-clock proving 2-3× "regressions" were the
-    // environment. A baseline recorded on THIS host, stamped with the
-    // canary that measures this host, lets every future ratio be
-    // normalized in code: (isolated/baseline) ÷ (canary/canary_base).
-    val baselineOut = sys.env.get("SPARK_GRAFT_BASELINE_OUT")
-    // Canary runs for full-fleet records, baseline recording, and any
-    // run with an EXPLICIT adjudication baseline (the normalized
-    // verdict needs this run's canary); SPARK_GRAFT_ONLY alone marks a
-    // hand-picked subset (local iteration or an adjudication child),
-    // where the ~10 s calibration is pure overhead.
-    val canaries: Seq[(String, Double)] =
-      if (only.isDefined && baselineOut.isEmpty &&
-        !sys.env.get("SPARK_GRAFT_BENCH_BASELINE").exists(p =>
-          p != "off" && p != "none")) Seq.empty
-      else canary(spark, sfDir)
-    canaries.foreach { case (k, v) =>
-      System.err.println(f"BENCH canary $k=$v%.3f")
-    }
-    val canaryJson = canaries.map { case (k, v) =>
-      "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    }.mkString("{", ",", "}")
     val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(q => f(q._1)))
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap(_.toIntOption).getOrElse(3)
-    if (baselineOut.isDefined) {
-      val outPath = baselineOut.get
-      val names = selected.keys.toSeq.sorted
-      val floors = scala.collection.mutable.Map[String, Double]()
-      // Round-21 (verdict ask #2): the RDD-iterative queries pay a
-      // fresh-JVM JIT floor ~2× their warm cost that min-of-3 does not
-      // absorb (the r20 sweep recorded n24 at 5.24 s against a
-      // reproducible ~2.0 s HEAD reading, which made the `under_floor`
-      // verdict nearly automatic for every fast-side mover). Those
-      // queries sweep at min-of-5 in their own batches; everything
-      // else stays min-of-3.
-      val jitHeavy = Set("n24_pagerank_centrality", "n22_recall_curve",
-        "n17_mutual_knn_clusters", "n31_ranking_eval", "t37_ngram_dup_report")
-      val (heavy, regular) = names.partition(jitHeavy.contains)
-      regular.grouped(12).zipWithIndex.foreach { case (chunk, i) =>
-        System.err.println(s"BASELINE batch ${i + 1}: ${chunk.mkString(",")}")
-        floors ++= isolatedRun(chunk, sfDir, cpus, runs = 3)
-      }
-      heavy.grouped(12).foreach { chunk =>
-        System.err.println(s"BASELINE jit-heavy batch (min-of-5): " +
-          chunk.mkString(","))
-        floors ++= isolatedRun(chunk, sfDir, cpus, runs = 5)
-      }
-      // Round-21 (verdict ask #2): the sweep self-checks its own host
-      // window — the canary re-runs AFTER the sweep, and a start→end
-      // drift outside [0.8, 1.25] marks the whole artifact unstable
-      // (LOUD stderr + an "unstable" field adjudication can read).
-      // The r20 floors were recorded in a window whose store canary
-      // later proved 2.5× off the gate run's; a drifting sweep should
-      // say so in-band instead of being trusted for a round.
-      val canEnd = canary(spark, sfDir)
-      val sweepDrift = canaryRatio(canEnd.toMap, canaries.toMap)
-      // Two triggers: geomean drift, AND any SINGLE component outside
-      // 1.5× — the motivating incident was store-only 2.5× drift,
-      // which a 4-component geomean dilutes to 1.26 (2.4× would pass).
-      val startMap = canaries.toMap
-      val componentDrift = canEnd.exists { case (k, v) =>
-        startMap.get(k).exists(s => v / s > 1.5 || v / s < 1.0 / 1.5) }
-      val unstable = sweepDrift.exists(c => c > 1.25 || c < 0.8) ||
-        componentDrift
-      if (unstable) System.err.println(
-        "BASELINE sweep UNSTABLE: start->end canary_ratio " +
-          "%.3f".formatLocal(java.util.Locale.ROOT, sweepDrift.get) +
-          " outside [0.8,1.25] — the host moved during the sweep; " +
-          "re-record in a quieter window before trusting these floors")
-      val canEndJson = canEnd.map { case (k, v) =>
-        "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      }.mkString("{", ",", "}")
-      val missing = names.filterNot(floors.contains)
-      def jnum(v: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, v)
-      val qs = names.collect { case n if floors.contains(n) =>
-        "\"" + n + "\":" + jnum(floors(n)) }.mkString("{", ",", "}")
-      val missJson = missing.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val line = s"""{"metric":"isolated_baseline","unit":"sec","queries":$qs,""" +
-        s""""canary":$canaryJson,"canary_end":$canEndJson,""" +
-        s""""unstable":$unstable,"missing":$missJson,""" +
-        s""""nqueries":${floors.size},"sf":"$sfDir"}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (line + "\n").getBytes("UTF-8"))
-      println(s"""{"metric":"baseline_recorded","nqueries":${floors.size},""" +
-        s""""missing":${missing.length},"unstable":$unstable,"file":"$outPath"}""")
-      spark.stop()
-      return
-    }
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     var idx = 0
     val results = selected.map { case (name, fn) =>
       idx += 1
-      // Quiesce the JVM before timing: a 130+ query run in one JVM
-      // accumulates garbage (codegen classes, broadcast blocks, shuffle
-      // state) whose collection otherwise lands as multi-hundred-ms pauses
-      // INSIDE whichever query happens to run next — observed in round 6 as
-      // a contiguous cluster of trivial queries all reading ~0.5 s. The GC
-      // also drives the ContextCleaner's async unpersist backlog to drain
-      // now rather than mid-measurement.
+      // Quiesce the JVM before timing: garbage left by earlier queries
+      // (codegen classes, broadcast blocks, shuffle state) otherwise
+      // lands as GC pauses inside whichever query runs next.
       System.gc()
-      // Three timed runs, report the min: the first run of a query pays its
-      // whole-stage-codegen compile + JIT warm-up (observed 3-4x on some
-      // queries), which is session noise, not plan cost — steady-state
-      // per-query time is what scales to a long-lived cluster. min-of-3
-      // (vs min-of-2) survives one GC pause landing in each of two runs.
+      // min-of-N: the first run of a query pays its whole-stage-codegen
+      // compile + JIT warm-up, which is session noise, not plan cost.
       val times = (1 to runs).flatMap { r =>
         val t0 = System.nanoTime()
         // noop write runs the FULL plan; .count() would let Catalyst prune
@@ -323,12 +47,8 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        // LSH queries persist their index frames; drop them so later
-        // runs aren't measured under another run's memory pressure.
         spark.catalog.clearCache()
-        // Per-run trace on stderr (stdout stays the one-line JSON contract):
-        // lets a regression be localized to a run ORDER position, not just a
-        // query name.
+        // Per-run trace on stderr (stdout stays the one-line JSON contract).
         System.err.println(f"BENCHLOG idx=$idx%3d run=$r $name dt=$dt%.3f")
         if (ok) Some(dt) else None
       }
@@ -337,269 +57,34 @@ object Bench {
       if (times.length < runs) failed += name
       name -> (if (times.length == runs) times.minOption else None)
     }
-    // A crashed query must never read as a (fast) success, and the timings
-    // map must hold ONLY real durations (no sentinel a consumer could sum):
-    // failures appear solely in the `failed` list.
+    // A crashed query must never read as a (fast) success: failures
+    // appear solely in the `failed` list, never as a timing.
     val qs = results.collect { case (k, Some(v)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.values.flatten.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"canary":$canaryJson,"failed":$failedJson,"sf":"$sfDir"}"""
-    // The full line (all queries, full precision) lands in the in-repo
-    // artifact — every query stays regression-diffable round over
-    // round. It is NOT the final stdout line: the driver's record
-    // keeps only the last ~2000 chars of output, and at 300+ queries
-    // this line is ~10 KB, which is why BENCH_r8..r14 all recorded
-    // "parsed": null. The driver-facing stdout contract is the COMPACT
-    // line printed at the very end of main(). The default artifact name
-    // is ROUND-tagged (BENCHFULL_r{N}.json, SPARK_GRAFT_ROUND set) or
-    // SF-tagged (BENCHFULL_<sf>.json) so consecutive runs at different
-    // scale factors — or a mid-round run vs the round-closing gate run —
-    // can never clobber each other's artifact (the round-9 confusion:
-    // the file NAMED _r9 was not the final r9 run). Opt out with
-    // SPARK_GRAFT_BENCH_FILE=/dev/null.
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+    // The full line (all queries, full precision) goes to a file; the
+    // stdout contract is the compact line printed last, because a reader
+    // of the merged output keeps only its last ~2000 chars.
     val sfTag = new java.io.File(sfDir).getName
-    val defaultFile = sys.env.get("SPARK_GRAFT_ROUND")
-      .map(r => s"BENCHFULL_r$r.json").getOrElse(s"BENCHFULL_$sfTag.json")
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", defaultFile)
-    // Standing isolated-run adjudication (round-9 advice promoted into
-    // the gate): every query that moved >1.3x vs the previous round's
-    // artifact (and is >= 0.2 s — below that the ±0.15 s scheduler
-    // jitter dominates any ratio) re-runs in a FRESH JVM, min-of-6; the
-    // fresh-JVM floor is appended to the artifact as a second JSON
-    // line, so round-over-round diffing reads pre-adjudicated data
-    // instead of re-running the playbook by hand.
-    //
-    // The baseline is now AUTO-DETECTED (round-12 fix: the protocol was
-    // skipped in rounds 10-11 precisely because it needed a manual env
-    // var that the round-closing gate run never set): explicit
-    // SPARK_GRAFT_BENCH_BASELINE wins ("off" disables); else the first
-    // existing of BENCHFULL_r{N-1}.json (SPARK_GRAFT_ROUND=N set) and
-    // BENCHFULL_<sfTag>.json — the latter is the previous committed
-    // full run at this scale factor, read BEFORE this run overwrites
-    // it. SPARK_GRAFT_ONLY runs skip adjudication: a fleet-relative
-    // protocol is meaningless for a hand-picked subset.
-    val baselinePath: Option[String] =
-      (sys.env.get("SPARK_GRAFT_BENCH_BASELINE") match {
-        case Some("off") | Some("none") => Seq.empty
-        case Some(p) => Seq(p)
-        case None if only.isDefined => Seq.empty
-        case None =>
-          // The host-recorded isolated baseline (SPARK_GRAFT_BASELINE_OUT
-          // sweep) wins when present: it was measured on THIS host with a
-          // canary triple, so ratios against it are normalizable, unlike
-          // the previous round's in-fleet artifact recorded under
-          // whatever the host was doing that day.
-          s"BASELINE_ISOLATED_$sfTag.json" +:
-            sys.env.get("SPARK_GRAFT_ROUND").flatMap(_.toIntOption).toSeq
-              .map(n => s"BENCHFULL_r${n - 1}.json") :+ s"BENCHFULL_$sfTag.json"
-      }).find(p => new java.io.File(p).exists())
-    // Round-13 postmortem: the 34-mover × fresh-JVM-each × min-of-6
-    // protocol blew the driver's bench envelope (BENCH_r13 rc=124). The
-    // record and the re-runs are decoupled: EVERY >1.3x mover gets a
-    // drift entry (infleet + baseline — the round-over-round record
-    // costs only JSON), and every SLOW-SIDE mover (round-20; fast-side
-    // movers adjudicate themselves as "under_floor" — an in-fleet time
-    // at-or-under the fresh-JVM floor cannot be a regression) gets an
-    // isolated fresh-JVM floor, min-of-3, BATCHED a dozen movers per
-    // child JVM so the startup cost is amortized. The wall-clock budget
-    // is a LAUNCH GATE, not a hard cap: a batch already running can
-    // overshoot it by up to the child's 8-minute timeout; the gate only
-    // prevents launching the NEXT batch past the budget.
-    val adjBudgetSec = sys.env.get("SPARK_GRAFT_ADJ_BUDGET")
-      .flatMap(_.toIntOption).getOrElse(480)
-    val adjMaxMovers = sys.env.get("SPARK_GRAFT_ADJ_MAX")
-      .flatMap(_.toIntOption).getOrElse(36)
-    val adjudicated: Seq[(String, Double, Double, Option[Double])] =
-      baselinePath match {
-        case Some(basePath) =>
-          System.err.println(s"BENCH adjudication baseline: $basePath")
-          val base = readTimings(basePath)
-          val movers = results.toSeq.collect {
-            case (name, Some(dt)) if base.get(name).exists(b =>
-              dt >= 0.2 && (dt > 1.3 * b || b > 1.3 * dt)) =>
-              (name, dt, base(name))
-          }.sortBy { case (_, dt, b) => -math.abs(dt - b) }
-          // Isolation order is by RATIO, not absolute delta (round-16
-          // fix: r15 left s8_change_detect at 1.75× unmeasured because
-          // three sub-0.5 s high-ratio movers were squeezed out by
-          // larger-absolute-delta ones under the cap). The drift RECORD
-          // above stays delta-ordered; the re-run QUEUE is worst-ratio
-          // first so no high-ratio mover is ever left at isolated:-1
-          // while a milder one got a floor.
-          // The queue is SLOW-SIDE ONLY since round-20: comparing warm
-          // in-fleet times against fresh-JVM host-local floors makes
-          // "fleet faster than floor" reads ENDEMIC, and a mover whose
-          // in-fleet time already beats its fresh-JVM floor cannot be a
-          // regression — isolating it can only re-measure a win, while
-          // its chunk's wall-clock squeezes real slowdowns out of the
-          // launch-gate budget (the r20 gate spent all 36 cap slots and
-          // still left 55 movers unmeasured, none of them slow-side
-          // eligible). Fast-side movers are adjudicated directly from
-          // the fleet reading ("under_floor", below); EVERY slow-side
-          // mover — at the mover threshold itself, not the old 1.4×
-          // eligibility band — enters the isolation queue, worst ratio
-          // first.
-          val eligible = movers
-            .filter { case (_, dt, b) => dt > b }
-            .sortBy { case (_, dt, b) => -(dt / b) }
-            .take(adjMaxMovers)
-          val t0 = System.nanoTime()
-          val iso = scala.collection.mutable.Map[String, Double]()
-          eligible.map(_._1).grouped(12).foreach { chunk =>
-            val elapsed = (System.nanoTime() - t0) / 1e9
-            if (elapsed < adjBudgetSec) {
-              System.err.println(s"BENCH adjudicating movers " +
-                s"${chunk.mkString(",")} (fresh JVM, min-of-3)")
-              iso ++= isolatedRun(chunk, sfDir, cpus, runs = 3)
-            } else System.err.println(
-              s"BENCH adjudication budget spent ($elapsed s >= " +
-                s"$adjBudgetSec s); skipping ${chunk.mkString(",")}")
-          }
-          movers.map { case (name, dt, b) => (name, dt, b, iso.get(name)) }
-        case None => Seq.empty
-      }
-    // Round-18 (judge ask #3): the host-local isolated baseline must
-    // not silently go stale — the r17 sweep fixed the cross-era drift
-    // tax ONCE, and in a few rounds it would itself be the "faster
-    // era" artifact with the canary normalization carrying all the
-    // weight. Two staleness triggers, both LOUD: (a) canary drift past
-    // the measured 1.5×-envelope's comfort zone (|ratio-1| > 0.25);
-    // (b) registered queries with no floor in the sweep (queries were
-    // added since it was recorded). Rule (also in the verify skill):
-    // either trigger → re-record via SPARK_GRAFT_BASELINE_OUT before
-    // the round-closing bench.
-    baselinePath.filter(_.contains("BASELINE_ISOLATED")).foreach { bp =>
-      canaryRatio(canaries.toMap, readCanaryBlock(bp))
-        .filter(c => c > 1.25 || c < 0.8)
-        .foreach(c => System.err.println(
-          "BENCH baseline STALE: canary_ratio " +
-            "%.3f".formatLocal(java.util.Locale.ROOT, c) +
-            s" vs $bp outside [0.8,1.25] — re-record the host-local " +
-            "sweep (SPARK_GRAFT_BASELINE_OUT) before the round-closing bench"))
-      val noFloor = results.keySet -- readTimings(bp).keySet
-      if (noFloor.nonEmpty) System.err.println(
-        s"BENCH baseline STALE: ${noFloor.size} registered queries have " +
-          s"no isolated floor in $bp (${noFloor.toSeq.sorted.take(6).mkString(",")}" +
-          s"${if (noFloor.size > 6) ",…" else ""}) — re-run the sweep " +
-          "after adding queries")
-    }
-    val adjLine = if (adjudicated.isEmpty) "" else {
-      // Canary-normalized verdict IN CODE (round-17, judge ask #1b): the
-      // r16 round left two >2× isolated floors (t45 2.15×, x7 2.02×)
-      // undischarged because nothing fired on the ISOLATED ratio — the
-      // protocol keyed off the in-fleet one. Now every isolated floor is
-      // judged here: inside 2× of baseline → "inside2x"; outside 2× with
-      // a canary on both sides → normalized = (iso/base) ÷ (canary/
-      // canary_base), verdict "env" if that lands inside 1.5× (the
-      // measured drift envelope) else "code_suspect"; outside 2× with no
-      // baseline canary → "needs_ab" (run tools/ab_bench.sh before the
-      // round closes). "code_suspect"/"needs_ab" are the only two states
-      // that demand human wall-clock — everything else is adjudicated by
-      // the artifact itself.
-      val baseCanary = baselinePath.map(readCanaryBlock).getOrElse(Map.empty)
-      val cr = canaryRatio(canaries.toMap, baseCanary)
-      def jnum(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)
-      val fields = adjudicated.map { case (n, fleet, b, iso) =>
-        val extra = iso match {
-          // A fast-side mover needs no isolated floor: its warm
-          // in-fleet time is ALREADY at-or-under the fresh-JVM floor,
-          // which no regression can produce — "under_floor" is the
-          // fleet reading adjudicating itself (round-20; this is what
-          // emptied the endemic `unmeasured` class). A slow-side mover
-          // can only read "unmeasured" if the launch-gate budget was
-          // spent before its chunk — every slow mover is
-          // isolation-eligible since round-20.
-          case None if b > fleet => "\"verdict\":\"under_floor\""
-          case None => "\"verdict\":\"unmeasured\""
-          case Some(v) =>
-            val r = v / b
-            // Verdicts are ASYMMETRIC (round-17 fix): a floor 2×+
-            // FASTER than its baseline row cannot be a regression —
-            // it is either a real win or a noisy baseline row (the
-            // first post-sweep run read e22 at 0.39× its own
-            // 40-minute-old floor, same code) — so the fast side
-            // reads "improved", never "code_suspect"; only the slow
-            // side can demand human follow-up.
-            val norm = cr.map(c => r / c)
-            // 'improved' additionally requires r < 1.0 (round-18 fix:
-            // a slow-side floor under an even slower canary is 'env',
-            // not 'improved' — nothing improved); and the fast side
-            // can NEVER read code_suspect, even when the canary says
-            // the host got faster (nm > 1.5 with r < 1 is a real win
-            // plus host drift, not a regression).
-            val verdict = norm match {
-              case _ if r >= 0.5 && r <= 2.0 => "inside2x"
-              case Some(nm) if nm >= 1.0 / 1.5 && nm <= 1.5 => "env"
-              case Some(_) if r < 1.0 => "improved"
-              case Some(nm) if nm < 1.0 / 1.5 => "env"
-              case Some(_) => "code_suspect"
-              case None => if (r < 1.0) "improved" else "needs_ab"
-            }
-            s"\"iso_ratio\":${jnum(r)}" +
-              norm.map(nm => s",\"normalized\":${jnum(nm)}").getOrElse("") +
-              s""","verdict":"$verdict""""
-        }
-        s"\"$n\":{\"infleet\":$fleet,\"baseline\":$b," +
-          s"\"isolated\":${iso.getOrElse(-1)},$extra}"
-      }.mkString(",")
-      val crField = cr.map(c => s""","canary_ratio":${jnum(c)}""").getOrElse("")
-      s"""{"run":"$outFile","adjudicated":{$fields},""" +
-        s""""baseline":"${baselinePath.getOrElse("")}"$crField}""" + "\n"
-    }
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", s"BENCHFULL_$sfTag.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n" + adjLine).getBytes("UTF-8"))
+      (line + "\n").getBytes("UTF-8"))
     catch { case t: Throwable => System.err.println(s"BENCHFULL write failed: $t") }
-    // Round-21 (verdict ask #7): adjudication discharge records are
-    // APPEND-ONLY — the r20 round-close snapshot overwrote the
-    // BENCHFULL line that discharged its code_suspect flags, leaving
-    // the optimization report citing a record that survived only in
-    // git history. Every adjudication line is ALSO appended (never
-    // truncated) to a round-/sf-tagged sidecar, so round-close reruns
-    // can no longer clobber the audit trail; the "run" field says
-    // which BENCHFULL artifact each record came from.
-    if (adjLine.nonEmpty && outFile != "/dev/null") {
-      val adjFile = sys.env.get("SPARK_GRAFT_ROUND")
-        .map(r => s"ADJUDICATION_r$r.jsonl")
-        .getOrElse(s"ADJUDICATION_$sfTag.jsonl")
-      try java.nio.file.Files.write(java.nio.file.Paths.get(adjFile),
-        adjLine.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case t: Throwable =>
-        System.err.println(s"ADJUDICATION append failed: $t") }
-    }
     spark.stop()
-    // Driver-facing stdout contract — printed LAST, and COMPACT. The
-    // driver records only the final ~2000 chars of the run's output and
-    // parses the result JSON out of that window, so the line must (a)
-    // come after all adjudication chatter and Spark shutdown logging,
-    // and (b) fit the window with room for sbt's "[success] ..."
-    // epilogue. All 300+ per-query timings can't fit (~10 KB — the
-    // r8-r14 "parsed": null failure); the compact line carries the
-    // total, the failure list, and the SLOWEST queries (3-decimal,
-    // most informative for a perf grade) up to a ~1300-char budget,
-    // with the full map's location in "full". build.sbt pairs this with
-    // run/outputStrategy := StdoutOutput so sbt cannot prefix the line
-    // with "[info] " (the r1-r7 failure — the line fit but was tagged).
     val byTime = results.toSeq.collect { case (k, Some(v)) => (k, v) }
       .sortBy(-_._2)
     val sb = new StringBuilder
     var kept = 0
     byTime.foreach { case (k, v) =>
-      // Locale.ROOT, not the f-interpolator (round-16 advice fix): f""
-      // formats with the JVM default locale, and a comma-decimal locale
-      // (de_DE) would emit invalid JSON — the exact "parsed": null
-      // failure the compact line exists to prevent.
       val frag = (if (kept == 0) "" else ",") + "\"" + k + "\":" +
         "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      // 1300 (was 1400): the canary block costs ~65 chars of the
-      // compact line; keep total < 1.6 KB inside the ~2000-char window.
       if (sb.length + frag.length <= 1300) { sb.append(frag); kept += 1 }
     }
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":{${sb.toString}},"queries_omitted":${byTime.length - kept},""" +
-      s""""nqueries":${byTime.length},"canary":$canaryJson,"failed":$failedJson,""" +
+      s""""nqueries":${byTime.length},"failed":$failedJson,""" +
       s""""full":"$outFile","sf":"$sfDir"}"""
     println(compact)
     System.out.flush()

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** t1 smoke: run the flagship entry() on sf0.001 exactly as the driver
-  * does and print the row count (driver checks rows > 0). */
+/** Smoke check: run the flagship entry() (the mirror's first list page
+  * over the fixture corpus) and print its row count, which must be > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DateType
+import graft.entries.{Engine, Fixture, SearchOptions}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Queries are contributed by QueryModules under graft.operators; each
-  * carries its DuckDB oracle SQL when SQL-expressible.
+/** The registered gate queries and the flagship entry the Smoke/Verify/
+  * Bench mains run. Queries are contributed by QueryModules; each carries
+  * its DuckDB oracle SQL when SQL-expressible.
   */
 object SparkEntry {
   private def modules: Seq[QueryModule] = Seq(
@@ -31,19 +30,16 @@ object SparkEntry {
     defs
   }
 
-  /** Flagship: the SURVEY §7 minimum slice — listEntries with a corrected
-    * date overlay, range filter, corrected-date sort, and first page
-    * (reference path src/lib/db/entries.ts:87-139). */
+  /** Flagship: the mirror's first list page over the fixture corpus —
+    * the shared filter pipeline (corrections overlay) sliced to page 1
+    * under the default `newest` sort (reference src/lib/db/entries.ts:87-139). */
   def entry(spark: SparkSession): DataFrame = {
-    val d = "/root/testdata/sf0.001"
-    operators.Star.withCorrectedDate(spark, Tables.orders(spark, d))
-      .where(col("o_orderstatus").isin("O", "F") &&
-        col("corrected_date") >= to_date(lit("1996-01-01")))
-      .orderBy(col("corrected_date").desc_nulls_last, col("o_orderkey").asc)
-      .limit(50)
+    val opts = SearchOptions(sort = "newest")
+    Engine.pageSlice(spark,
+      Engine.listEntriesFiltered(spark, Fixture.df(spark), opts), opts, page = 1)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every registered query by name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(d => d.name -> d.run).toMap
 

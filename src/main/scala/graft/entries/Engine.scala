@@ -132,11 +132,14 @@ object Engine {
     * bound, not a free parameter (the reference UI pins 50). */
   val MaxPageSize = 1000
 
+  private[entries] def requirePageSize(pageSize: Int): Unit =
+    require(pageSize >= 1 && pageSize <= MaxPageSize,
+      s"pageSize must be in [1, $MaxPageSize], got $pageSize")
+
   def listEntries(spark: SparkSession, entries: DataFrame,
                   opts: SearchOptions,
                   ftsIndexPath: Option[String] = None): ListPage = {
-    require(opts.pageSize >= 1 && opts.pageSize <= MaxPageSize,
-      s"pageSize must be in [1, $MaxPageSize], got ${opts.pageSize}")
+    requirePageSize(opts.pageSize)
     // A1/O2 — count, clamp the requested page, slice (entries.ts:102-116).
     // One cached filtered plan feeds both actions (the reference's two
     // SQLite round-trips share nothing).
@@ -167,6 +170,7 @@ object Engine {
                        opts: SearchOptions, last: Option[String],
                        lastId: Long,
                        ftsIndexPath: Option[String] = None): DataFrame = {
+    requirePageSize(opts.pageSize)
     val base = listEntriesFiltered(spark, entries, opts, ftsIndexPath)
     def descNullsLast(key: Column): Column = last match {
       case Some(v) => key < v || (key === v && col("id") > lastId) || key.isNull
@@ -335,9 +339,11 @@ object AgencyEngine {
   }
 
   /** Agencies listing (agencies.ts:146-179): substring-AND search over
-    * name+slug, comparator sort dispatch, page slice. */
+    * name+slug, comparator sort dispatch, page slice. A page below 1
+    * reads as page 1 (a negative OFFSET fails Spark's analysis). */
   def listAgencies(stats: DataFrame, search: Option[String], sort: String,
                    page: Int, pageSize: Int): DataFrame = {
+    Engine.requirePageSize(pageSize)
     var df = stats
     search.map(_.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty))
       .filter(_.nonEmpty).foreach { terms =>
@@ -352,7 +358,7 @@ object AgencyEngine {
     }
     // TakeOrderedAndProject slice (stats cardinality = #agencies, but the
     // global row_number window it replaces is a habit worth not having).
-    df.orderBy(keys: _*).offset((page - 1) * pageSize).limit(pageSize)
+    df.orderBy(keys: _*).offset((math.max(page, 1) - 1) * pageSize).limit(pageSize)
   }
 
   /** agencyBySlug (agencies.ts:181-184). */

@@ -19,9 +19,6 @@ import graft.operators.ScaleOps
   */
 object Warehouse {
 
-  /** Write the corrected entries view partitioned by request year.
-    * Rows with no request date land in the null partition — they are
-    * still present for non-date reads (nothing is dropped at write). */
   /** The corrected view plus the request_year partition key — the ONE
     * derivation every warehouse writer uses (batch here, streaming in
     * Streams.warehouseAppendStream). A second copy of the year parse
@@ -31,6 +28,9 @@ object Warehouse {
       .withColumn("request_year",
         substring(col("corrected_request"), 1, 4).cast(IntegerType))
 
+  /** Write the corrected entries view partitioned by request year.
+    * Rows with no request date land in the null partition — they are
+    * still present for non-date reads (nothing is dropped at write). */
   def writeCorrected(spark: SparkSession, entries: DataFrame, path: String): Unit =
     ScaleOps.writePartitioned(correctedPartitioned(spark, entries), path, "request_year")
 

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
@@ -425,15 +424,4 @@ object NativeFunctions {
     registrations.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
-}
-
-/** SparkSessionExtensions hook: `--conf spark.sql.extensions=
-  * graft.plans.GraftExtensions` injects the native functions and the
-  * fts_match rewrite rule into every session built against the
-  * extension point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    NativeFunctions.registrations.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(session => RewriteFtsMatch(session))
-  }
 }

@@ -177,6 +177,11 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
       Engine.listEntries(spark, Fixture.df(spark),
         SearchOptions(pageSize = Engine.MaxPageSize + 1))
     }
+    // the keyed-cursor mode holds the same bound
+    intercept[IllegalArgumentException] {
+      Engine.listEntriesAfter(spark, Fixture.df(spark),
+        SearchOptions(pageSize = Engine.MaxPageSize + 1), None, Long.MaxValue)
+    }
   }
 
   test("highest_fee cursor rejects a missing or malformed value (fail fast)") {
@@ -254,6 +259,16 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
       val p2 = AgencyEngine.listAgencies(stats, None, "most_requests", 2, 3)
         .collect().map(_.getString(0)).toSeq
       assert(p2 == most.map(_._1).slice(3, 6))
+      // a page below 1 reads as page 1, never a negative OFFSET
+      for (p <- Seq(0, -3)) {
+        val low = AgencyEngine.listAgencies(stats, None, "most_requests", p, 3)
+          .collect().map(_.getString(0)).toSeq
+        assert(low == most.map(_._1).take(3), s"page $p")
+      }
+      for (size <- Seq(0, Engine.MaxPageSize + 1))
+        intercept[IllegalArgumentException] {
+          AgencyEngine.listAgencies(stats, None, "most_requests", 1, size)
+        }
       // agencyBySlug point lookup
       val one = AgencyEngine.agencyBySlug(stats, most.head._1).collect()
       assert(one.length == 1 && one.head.getString(0) == most.head._1)

@@ -191,7 +191,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // whole-stage codegen shows as a `*(n)` stage prefix in the tree
     // string; under AQE the codegen'd final plan only exists after an
     // action, so execute first.
-    for (name <- Seq("p1_ci_equality", "a2_agency_stats", "a9_home_stats")) {
+    for (name <- Seq("q_list_entries", "q_agency_stats", "q_home_stats")) {
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect() // finalize this plan in place (a write would clone it)
       assert(df.queryExecution.executedPlan.toString.contains("*("),

@@ -29,7 +29,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     var computes = 0
     def compute() = {
       computes += 1
-      Tables.events(spark, sf).groupBy("event_type").agg(count(lit(1)).as("n"))
+      entries.Fixture.df(spark).groupBy("resolution").agg(count(lit(1)).as("n"))
     }
     val params = Seq("window" -> "all")
     val (r1, hit1) = ResultCache.withCache(spark, dir, "type_counts", params, "bm-1")(compute())
