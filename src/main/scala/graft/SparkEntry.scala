@@ -19,8 +19,6 @@ object SparkEntry {
     operators.SimilarityQueries,
     operators.TextAnalysisQueries,
     operators.GovernanceQueries,
-    operators.AnalyticsQueries,
-    operators.InferenceQueries,
   )
 
   lazy val allDefs: Seq[QueryDef] = {

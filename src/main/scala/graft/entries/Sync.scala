@@ -41,16 +41,59 @@ object Sync {
     }
   }
 
-  /** cleanText — reference src/lib/sync.ts:78-81. */
-  def cleanText(value: String): String =
-    if (value == null) "" else value.replaceAll("\\s+", " ").trim
+  /** A run of JS `\s` (WhiteSpace + LineTerminator). Java's `\s` and
+    * `String.trim` miss U+00A0 and the other Unicode spaces. */
+  private val JsSpaceRun = Pattern.compile(
+    "[\\t\\n\\u000B\\f\\r \\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]+")
 
-  /** Minimal entity decode — node-html-parser's `.text` (used by the
-    * reference parser) returns decoded text; the regex extractor sees raw
-    * markup, so decode the five standard entities. */
+  /** cleanText — reference src/lib/sync.ts:78-81: `replace(/\s+/g, " ")
+    * .trim()` with JS's whitespace class. */
+  def cleanText(value: String): String =
+    if (value == null) "" else
+      JsSpaceRun.matcher(value).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
+
+  private val CharRef = Pattern.compile(
+    "&(?:#([0-9]+);?|#[xX]([0-9a-fA-F]+);?|(amp|lt|gt|quot|apos|nbsp);)")
+  private val NamedRef = Map("amp" -> "&", "lt" -> "<", "gt" -> ">",
+    "quot" -> "\"", "apos" -> "'", "nbsp" -> "\u00A0")
+  /** HTML's remap of numeric refs 0x80-0x9F to their windows-1252 letters. */
+  private val C1Ref: Map[Int, Int] = Map(
+    0x80 -> 0x20AC, 0x82 -> 0x201A, 0x83 -> 0x0192, 0x84 -> 0x201E,
+    0x85 -> 0x2026, 0x86 -> 0x2020, 0x87 -> 0x2021, 0x88 -> 0x02C6,
+    0x89 -> 0x2030, 0x8A -> 0x0160, 0x8B -> 0x2039, 0x8C -> 0x0152,
+    0x8E -> 0x017D, 0x91 -> 0x2018, 0x92 -> 0x2019, 0x93 -> 0x201C,
+    0x94 -> 0x201D, 0x95 -> 0x2022, 0x96 -> 0x2013, 0x97 -> 0x2014,
+    0x98 -> 0x02DC, 0x99 -> 0x2122, 0x9A -> 0x0161, 0x9B -> 0x203A,
+    0x9C -> 0x0153, 0x9E -> 0x017E, 0x9F -> 0x0178)
+
+  private def codePoint(digits: String, radix: Int): String = {
+    val d = digits.dropWhile(_ == '0')
+    val cp = if (d.isEmpty) 0 else if (d.length > 7) -1 else Integer.parseInt(d, radix)
+    val valid = cp > 0 && cp <= 0x10FFFF && (cp < 0xD800 || cp > 0xDFFF)
+    new String(Character.toChars(if (valid) C1Ref.getOrElse(cp, cp) else 0xFFFD))
+  }
+
+  /** Character-reference decode, as node-html-parser's `.text` (what the
+    * reference parser reads) does with `he.decode`: decimal and hex refs
+    * (`;` optional, invalid code points become U+FFFD, 0x80-0x9F remap to
+    * windows-1252) and the named refs amp/lt/gt/quot/apos/nbsp. One
+    * left-to-right pass, so `&amp;#233;` decodes once, to `&#233;`. */
   def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
-      .replace("&apos;", "'").replace("&#39;", "'").replace("&amp;", "&")
+    if (s.indexOf('&') < 0) s
+    else {
+      val m = CharRef.matcher(s)
+      val out = new java.lang.StringBuilder(s.length)
+      var last = 0
+      while (m.find()) {
+        out.append(s, last, m.start())
+        out.append(
+          if (m.group(1) != null) codePoint(m.group(1), 10)
+          else if (m.group(2) != null) codePoint(m.group(2), 16)
+          else NamedRef(m.group(3)))
+        last = m.end()
+      }
+      out.append(s, last, s.length).toString
+    }
 
   // Class markers match whole SPACE-DELIMITED class tokens (`class=
   // "col-md-4 content-col-label"` on the real Bootstrap page),
@@ -75,9 +118,10 @@ object Sync {
   private val RequestItemsRe = Pattern.compile(
     s"""${classTok("container-requestitems")}([\\s\\S]*)""")
 
-  /** node-html-parser `.text` semantics for a captured inner-HTML span:
-    * drop tags, keep their text content. */
-  private def stripTags(s: String): String = s.replaceAll("<[^>]+>", " ")
+  /** `cleanText(node.text)` for a captured inner-HTML span: drop tags,
+    * keep their text content, decode character references, then clean. */
+  private def nodeText(s: String): String =
+    cleanText(decodeEntities(s.replaceAll("<[^>]+>", " ")))
 
   /** S2 — parseEntry: label/value DOM pairs + panel sections -> typed
     * record (reference src/lib/sync.ts:83-130). Regex-driven over the
@@ -95,8 +139,8 @@ object Sync {
       val buf = Seq.newBuilder[String]; while (m.find()) buf += m.group(1); buf.result()
     }
     labels.zip(data).foreach { case (k, v) =>
-      val key = normalizeKey(cleanText(stripTags(k)))
-      if (key.nonEmpty) values(key) = decodeEntities(cleanText(stripTags(v)))
+      val key = normalizeKey(nodeText(k))
+      if (key.nonEmpty) values(key) = nodeText(v)
     }
 
     // Panels are scoped PER panel-body block (the reference iterates
@@ -125,9 +169,9 @@ object Sync {
           val sm = StrongRe.matcher(chunk)
           val pm = PRe.matcher(chunk)
           if (sm.find() && pm.find()) {
-            val key = normalizeKey(cleanText(stripTags(sm.group(1))))
+            val key = normalizeKey(nodeText(sm.group(1)))
             if (key.nonEmpty)
-              values(key) = decodeEntities(cleanText(stripTags(pm.group(1))))
+              values(key) = nodeText(pm.group(1))
           }
         case _ => ()
       }

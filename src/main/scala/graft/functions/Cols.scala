@@ -7,9 +7,9 @@ import org.apache.spark.sql.types._
 /** The engine's scalar function library as pure Column expressions.
   *
   * Everything here compiles to built-in Catalyst expressions (codegen'd,
-  * pushdown-friendly); the only UDFs in the engine are the three in
-  * [[Udfs]] whose regex-callback semantics exceed SQL (titlify,
-  * normalizeAgencyName, stripDiacritics). Each builder cites the
+  * pushdown-friendly). The string UDFs whose semantics exceed SQL are
+  * the two in [[Udfs]] (titlify, buildPageNumbers) and the agency
+  * identity UDFs in `Normalize`/`Corrections`. Each builder cites the
   * reference implementation it matches.
   */
 object Cols {
@@ -183,19 +183,14 @@ object Cols {
       "[^a-z0-9]+"), t => t =!= "")
 }
 
-/** The engine's entire UDF surface: three deterministic string UDFs whose
-  * JS-regex-callback semantics genuinely exceed built-in expressions.
-  * Everything else is Column expressions (see [[Cols]]). */
+/** Two deterministic UDFs whose JS semantics genuinely exceed built-in
+  * expressions. Everything else here is Column expressions (see [[Cols]]). */
 object Udfs {
   import org.apache.spark.sql.functions.udf
 
   /** F2 titlify — reference src/lib/utils.ts:51-59. */
   val titlify = udf((s: String, disableCapAcro: Boolean) =>
     if (s == null) null else Text.titlify(s, disableCapAcro))
-
-  /** Diacritic fold for FTS tokenization (NFD + strip marks). */
-  val stripDiacritics = udf((s: String) =>
-    if (s == null) null else Text.stripDiacritics(s))
 
   /** F18 buildPageNumbers — reference src/lib/utils.ts:160-172. */
   val buildPageNumbers = udf((page: Int, total: Int) =>

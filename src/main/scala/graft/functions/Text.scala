@@ -8,8 +8,9 @@ import java.util.regex.{Matcher, Pattern}
   * /root/reference/src/lib/corrections.ts exactly (JS regex behavior
   * re-expressed with java.util.regex; \w and \b are ASCII in both).
   * These back the tiny UDF surface (titlify / normalizeAgencyName /
-  * stripDiacritics); everything else in the engine is pure Column
-  * expressions so Catalyst codegen and pushdown stay intact.
+  * buildPageNumbers) and the native strip_diacritics expression;
+  * everything else in the engine is pure Column expressions so Catalyst
+  * codegen and pushdown stay intact.
   */
 object Text {
 

@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
   * The reference's incremental model is a scheduled micro-batch with a
   * high-watermark (sync.ts:177-212), which maps to Trigger.AvailableNow
   * over a file source + foreachBatch upsert. Beyond parity, the engine
-  * adds the event-stream operators a training-data pipeline needs:
-  * watermarked windowed aggregation and custom sessionization state via
-  * mapGroupsWithState — both with bounded state at scale (watermark
-  * evicts; session state is per-active-user only).
+  * adds custom sessionization state via flatMapGroupsWithState, with
+  * bounded state at scale (session state is per-active-user only), and
+  * the batch_id-scoped incremental index maintainers.
   */
 object Streams {
 
@@ -60,16 +59,6 @@ object Streams {
         s"events.ts has unsupported physical type $other")
     }
   }
-
-  /** Watermarked tumbling-window counts per event type — the canonical
-    * streaming aggregation (late data beyond 1h dropped, state evicted
-    * past the watermark). */
-  def windowedCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("cnt"))
 
   /** 30-minute-gap sessionization with explicit state — the streaming
     * twin of the batch e1_sessionize query. Emits a session when the gap
@@ -151,39 +140,6 @@ object Streams {
           }
       }
   }
-
-  /** Stream-stream event-time interval join: clicks matched to the SAME
-    * user's views within the preceding hour. Both sides carry
-    * watermarks and the join predicate bounds event time in BOTH
-    * directions, so each side's buffered state is evicted once the
-    * watermark passes the interval — state ∝ one hour of arrivals, never
-    * stream history (an unbounded-state stream join is the scale bug
-    * this shape avoids). */
-  def clickViewJoin(events: DataFrame): DataFrame = {
-    val clicks = events.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val views = events.where(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    clicks.join(views,
-      col("user_id") === col("view_user") &&
-        col("click_ts") >= col("view_ts") &&
-        col("click_ts") < col("view_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("click_id"), col("user_id"), col("view_id"))
-  }
-
-  /** Streaming exact dedup — the streaming twin of d1 for an
-    * at-least-once source: re-deliveries of the same event_id within the
-    * watermark horizon are dropped, and the dedup state is EVICTED past
-    * the watermark, so state size is bounded by the horizon's key
-    * arrival rate, never by stream history (plain dropDuplicates on an
-    * unbounded stream grows state forever — the scale bug this avoids). */
-  def dedupStream(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Incremental MinHash-LSH index maintenance — the dedup analog of the
     * FTS index upkeep (S6): documents arrive in micro-batches, each batch
@@ -797,70 +753,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming feed of the partitioned entries warehouse: each
-    * micro-batch applies the shared corrections overlay
-    * (Normalize.withCorrectedDates — the same single source the batch
-    * Warehouse writes) and lands partitioned by (batch_id,
-    * request_year) with DYNAMIC partition overwrite: a retried batch
-    * replaces exactly its own (batch, year) partitions — idempotent —
-    * while other batches' data is untouched — append-safe. Readers
-    * prune on request_year exactly as with the batch-written store
-    * (partition columns prune wherever they sit in the directory
-    * tree). */
-  def warehouseAppendStream(entries: DataFrame, path: String,
-                            checkpointDir: String): Unit = {
-    val q = entries.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.entries.Warehouse.correctedPartitioned(batch.sparkSession, batch)
-          .withColumn("batch_id", lit(batchId))
-          .write
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .partitionBy("batch_id", "request_year")
-          .parquet(path)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Incremental sync as a stream: AvailableNow over the source dir,
-    * foreachBatch last-writer-wins upsert into a parquet target keyed by
-    * event_id — the reference's `ON CONFLICT DO UPDATE` (sync.ts:30-48)
-    * against an append-only lake. Returns rows upserted. */
-  def incrementalUpsert(spark: SparkSession, sourceDir: String,
-                        targetDir: String, checkpointDir: String): Long = {
-    import org.apache.spark.sql.expressions.Window
-    val q = eventStream(spark, sourceDir).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tagged = batch.withColumn("batch_id", lit(batchId))
-        val merged = try {
-          val existing = batch.sparkSession.read.parquet(targetDir)
-          existing.unionByName(tagged)
-        } catch { case _: Throwable => tagged }
-        val w = Window.partitionBy("event_id")
-          .orderBy(col("batch_id").desc, col("ts").desc)
-        merged
-          .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-          .drop("rn")
-          .write.mode("overwrite").parquet(targetDir + ".tmp")
-        // atomic-ish swap for the local demo; a real lake uses Delta MERGE
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        val tgt = new org.apache.hadoop.fs.Path(targetDir)
-        fs.delete(tgt, true)
-        fs.rename(new org.apache.hadoop.fs.Path(targetDir + ".tmp"), tgt)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(targetDir).count()
-  }
-
   /** Streaming drift detection — the e3 batch z-score maintained
     * incrementally: each micro-batch writes ITS OWN daily-count deltas
     * to a batchId-scoped partition (overwrite — idempotent under
@@ -892,266 +784,6 @@ object Streams {
     graft.operators.TextAnalysisQueries.driftZscores(
       spark.read.parquet(rollupDir)
         .groupBy("event_type", "day").agg(sum(col("cnt")).as("cnt")))
-
-  /** Streaming read path of e13 rate anomaly — rides the SAME
-    * (event_type, day, cnt) rollup as the e3 drift twin (one
-    * incremental pass serves both monitors): counts re-sum across
-    * micro-batch partials (merge-associative) and the z-scoring is the
-    * shared batch stage
-    * ([[graft.operators.AnalyticsQueries.rateAnomalyFromDailyCounts]]),
-    * so streamed == batch by construction. */
-  def readRateAnomaly(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.rateAnomalyFromDailyCounts(
-      spark.read.parquet(rollupDir)
-        .groupBy("event_type", "day").agg(sum(col("cnt")).as("c")))
-
-  /** Merged (event_type, day, c) view of the incremental daily rollup —
-    * the one re-sum every daily-count consumer shares. */
-  private def mergedDailyCounts(spark: SparkSession,
-                                rollupDir: String): DataFrame =
-    spark.read.parquet(rollupDir)
-      .groupBy("event_type", "day").agg(sum(col("cnt")).as("c"))
-
-  /** Streaming read path of e21 forecast baseline — a THIRD consumer
-    * of the (type, day) rollup (with e3 drift and e13 rate anomaly):
-    * merged daily counts through the SHARED batch stage
-    * ([[graft.operators.AnalyticsQueries.forecastBaselineFromDaily]]);
-    * split-day partials re-sum before the day−7 join, so streamed ==
-    * batch by construction. */
-  def readForecastBaseline(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.forecastBaselineFromDaily(
-      mergedDailyCounts(spark, rollupDir))
-
-  /** Streaming read path of e22 weekday profile — same rollup, shared
-    * final stage ([[graft.operators.AnalyticsQueries
-    * .weekdayProfileFromDaily]]): the dow re-aggregation of merged
-    * daily counts equals the one-pass profile because counts are
-    * merge-associative. */
-  def readWeekdayProfile(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.weekdayProfileFromDaily(
-      mergedDailyCounts(spark, rollupDir))
-
-  /** Streaming read path of a21 daily co-movement — same rollup,
-    * shared final stage ([[graft.operators.AnalyticsQueries
-    * .dailyCorrelationFromDaily]]): the Pearson moments are sums over
-    * the merged (day, pair) frame. */
-  def readDailyCorrelation(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.dailyCorrelationFromDaily(
-      mergedDailyCounts(spark, rollupDir))
-
-  /** Incremental side of e5 cohort retention — the e3 rollup pattern
-    * applied to the retention triangle. Each micro-batch reduces its
-    * events to the one frame the read path needs: per (user_id, active
-    * ISO week) the min event ts seen in this batch. That partial is
-    * sufficient statistics for BOTH retention inputs — min(min_ts)
-    * over all batches is the user's global first event (⇒ cohort
-    * week), and the distinct (user, week) pairs are the activity
-    * matrix — so the rollup grows O(users × active-weeks-per-batch),
-    * never O(events), and re-running a batch overwrites its own
-    * batch_id partition idempotently (exactly-once under AvailableNow
-    * restarts). */
-  def incrementalCohortPartials(spark: SparkSession, sourceDir: String,
-                                rollupDir: String, checkpointDir: String): Unit = {
-    val q = eventStream(spark, sourceDir).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(col("user_id"),
-            to_date(date_trunc("week", col("ts"))).as("wk"))
-          .agg(min(col("ts")).as("min_ts"))
-          .write.mode("overwrite").parquet(s"$rollupDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Merge the cohort partials and build the retention triangle — the
-    * streaming read path of e5, sharing the batch query's final stage
-    * ([[graft.operators.AnalyticsQueries.cohortTriangle]]) so the two
-    * paths cannot drift. first-seen re-minimizes min_ts across batches
-    * (min is merge-associative, any batch split gives the same cohort
-    * week); the week-truncation of the merged min equals the batch
-    * path's truncation of the global min because trunc is monotone. */
-  def readCohortRetention(spark: SparkSession, rollupDir: String): DataFrame = {
-    val parts = spark.read.parquet(rollupDir)
-    val firstSeen = parts.groupBy("user_id")
-      .agg(to_date(date_trunc("week", min(col("min_ts")))).as("cw"))
-    graft.operators.AnalyticsQueries.cohortTriangle(
-      firstSeen, parts.select("user_id", "wk"))
-  }
-
-  /** Incremental (user, day) activity rollup — the daily-grain sibling
-    * of [[incrementalCohortPartials]]: each micro-batch reduces to
-    * per-(user_id, active day) event COUNTS, a bounded sufficient
-    * statistic that serves BOTH daily dashboards downstream — active
-    * users (e6: the distinct pairs) and decayed activity (e8: counts
-    * re-summed, merge-associative). Rollup grows O(users ×
-    * active-days-per-batch), never O(events); batch_id partitions
-    * overwrite idempotently (exactly-once under AvailableNow
-    * restarts). */
-  def incrementalUserDayCounts(spark: SparkSession, sourceDir: String,
-                               rollupDir: String, checkpointDir: String): Unit = {
-    val q = eventStream(spark, sourceDir).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$rollupDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming read path of e6 active users: the rollup's distinct
-    * (user, day) pairs through the SHARED batch stage
-    * ([[graft.operators.AnalyticsQueries.activeUsersFromDays]]). The
-    * distinct-pair set is batch-split-invariant, so streamed == batch
-    * by construction. */
-  def readActiveUsers(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.activeUsersFromDays(
-      spark.read.parquet(rollupDir).select("user_id", "day"))
-
-  /** Streaming read path of e8 decayed activity: per-batch day counts
-    * re-summed (count partials are merge-associative — a day split
-    * across micro-batches merges exactly) through the SHARED batch
-    * stage ([[graft.operators.AnalyticsQueries.decayedFromDayCounts]]).
-    * The anchor day re-derives from the merged rollup, so late batches
-    * move it exactly as they would move the batch query's. */
-  def readDecayedActivity(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.decayedFromDayCounts(
-      spark.read.parquet(rollupDir).select("user_id", "day", "cnt"))
-
-  /** Streaming read path of e15 power-user curve — a THIRD consumer of
-    * the (user, day) rollup (with e6 active users and e8 decayed
-    * activity): the histogram depends only on the distinct pair set,
-    * which is batch-split-invariant; final stage shared with the batch
-    * query ([[graft.operators.AnalyticsQueries.powerUserCurve]]). */
-  def readPowerUserCurve(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.powerUserCurve(
-      spark.read.parquet(rollupDir).select("user_id", "day"))
-
-  /** Streaming read path of e18 user streaks — a FOURTH consumer of
-    * the (user, day) rollup: the gaps-and-islands streak derivation
-    * depends only on the distinct pair set, which is batch-split-
-    * invariant; final stage shared with the batch query
-    * ([[graft.operators.AnalyticsQueries.userStreaks]]). */
-  def readUserStreaks(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.userStreaks(
-      spark.read.parquet(rollupDir).select("user_id", "day"))
-
-  /** Streaming read path of e7 growth accounting — rides the SAME
-    * cohort partials ([[incrementalCohortPartials]]): the distinct
-    * (user_id, wk) pairs of the rollup ARE the activity frame the
-    * growth window needs, so one incremental rollup serves retention
-    * (e5) AND growth accounting (e7) with no second pass over events.
-    * The final stage is shared with the batch query
-    * ([[graft.operators.AnalyticsQueries.growthFromUserWeeks]]) so the
-    * two paths cannot drift; the rollup's (user, week) set is
-    * batch-split-invariant (a pair appears iff the user was active
-    * that week, regardless of which micro-batch saw it). */
-  def readGrowthAccounting(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.AnalyticsQueries.growthFromUserWeeks(
-      spark.read.parquet(rollupDir).select("user_id", "wk"))
-
-  /** Streaming batched inference — score NEWLY ARRIVING documents per
-    * micro-batch through the SAME
-    * [[graft.operators.Inference.batchedInference]] the batch path
-    * uses (the two cannot drift): normalize on the frame, partition-
-    * owned batches of `batchSize`, one score row per document. Output
-    * lands batch_id-scoped with overwrite, so a retried micro-batch
-    * REPLACES its own directory — idempotent under failure/retry.
-    * The model is FROZEN by construction (the scorer function is
-    * fixed for the stream's lifetime) — a model refresh is a new
-    * stream over a new output root, never an in-place drift, the same
-    * frozen-model rule the IVF/PQ incremental paths hold. */
-  def incrementalScore(spark: SparkSession, sourceDir: String,
-                       outDir: String, checkpointDir: String,
-                       batchSize: Int = 32,
-                       scoreBatch: Seq[(Long, String)] => Seq[(Long, Long)] =
-                         graft.operators.Inference.surrogateScoreBatch): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Inference.batchedInference(batch, batchSize)(scoreBatch)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming INCREMENTAL CACHED inference — the i2 twin and the
-    * production shape of a recurring scoring/embedding pipeline: each
-    * micro-batch scores against the ACCUMULATED content-addressed
-    * cache (every prior batch's md5-of-normalized-text keys, min-merged
-    * on read so re-delivery can never fork a key), invokes the model
-    * ONLY for genuinely new content via the same
-    * [[graft.operators.Inference.cachedInference]] the batch path
-    * uses, and lands both its scores and its own cache delta
-    * batch_id-scoped — idempotent overwrite, the standing incremental-
-    * index contract here. A re-crawl that re-delivers old content hits
-    * the cache instead of the model; the `from_cache` column in each
-    * batch's score output is the per-batch hit-rate audit. */
-  def incrementalCachedScore(spark: SparkSession, sourceDir: String,
-                             outDir: String, cacheDir: String,
-                             checkpointDir: String,
-                             batchSize: Int = 32,
-                             scoreBatch: Seq[(Long, String)] => Seq[(Long, Long)] =
-                               graft.operators.Inference.surrogateScoreBatch): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scored = graft.operators.Inference
-          .cachedInference(batch, readScoreCache(spark, cacheDir), batchSize)(
-            scoreBatch)
-        scored.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        // Land ALL of this batch's keys (hits included): the min-merge
-        // on read makes that idempotent — same content, same score —
-        // and it keeps the delta a pure function of the batch.
-        batch
-          .select(col("doc_id"),
-            md5(graft.operators.Dedup.normText(col("text"))).as("key"))
-          .join(spark.read.parquet(s"$outDir/batch_id=$batchId")
-            .select(col("doc_id"), col("score_q")), Seq("doc_id"))
-          .groupBy("key").agg(min(col("score_q")).as("score_q"))
-          .write.mode("overwrite").parquet(s"$cacheDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The accumulated content-addressed score cache: min-merge of every
-    * batch delta under `cacheDir` (associative — batch split and
-    * re-delivery never change the served value), or a schema-stable
-    * empty frame before the first delta lands. */
-  def readScoreCache(spark: SparkSession, cacheDir: String): DataFrame = {
-    val dir = new java.io.File(cacheDir)
-    val hasData = dir.isDirectory &&
-      dir.listFiles().exists(_.getName.startsWith("batch_id="))
-    if (!hasData) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("key", StringType),
-          StructField("score_q", LongType))))
-    } else {
-      spark.read.parquet(cacheDir)
-        .groupBy("key").agg(min(col("score_q")).as("score_q"))
-    }
-  }
 
   /** Incremental gram-index maintenance (the d21 substring-dedup
     * store): each micro-batch grams ONLY its own rows through the
@@ -1220,17 +852,4 @@ object Streams {
       .start()
     q.awaitTermination()
   }
-
-  // Scoped out, deliberately: an incremental twin of the ORDERED e4
-  // funnel. Retention decomposes because min() is merge-associative —
-  // per-batch (user, week, min ts) is a bounded sufficient statistic.
-  // The funnel's stage-2 statistic, min click ts >= t1, is NOT
-  // mergeable from bounded per-batch aggregates: t1 itself can
-  // decrease when a later batch delivers an earlier view, retro-
-  // qualifying clicks that a per-batch min already discarded (any
-  // time-bucketed min has the same blind spot inside t1's bucket).
-  // The exact incremental form needs the per-user event log — which
-  // is just the batch e4 over an appended store. Run e4 over the
-  // accumulating events table instead of pretending a rollup can
-  // carry it.
 }

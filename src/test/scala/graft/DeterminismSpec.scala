@@ -19,7 +19,7 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
     "o6_snapshot_sort", "o7_topk_agg", "q_list_entries", "s9_rss_items",
     "n1_ann_bruteforce", "n2_ann_lsh", "n4_ann_batch",
     "s9b_rss_document", "s9c_agency_feed", "t39_dsir_resample",
-    "t46_cms_counts", "e23_user_zipf", "t51_vocab_coverage",
+    "t46_cms_counts", "t51_vocab_coverage",
     "t48_kl_source_drift")
 
   test("limit-bearing queries are invariant to shuffle partition count") {
@@ -39,12 +39,11 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
   // No LIMIT in these, but each leans on a window / hash-bucket / batch
   // mechanism where a partitioning-sensitivity bug would hide: d20/d21
   // islands windows, n31's rank window + integer DCG, x9's election
-  // window, i1's batch boundaries.
+  // window.
   private val r13Queries = Seq(
     "d20_max_dup_spans", "d21_spans_against_index", "n31_ranking_eval",
-    "x9_curation_manifest", "i1_batched_inference", "d22_span_attribution",
-    "i2_cached_inference", "n32_scalar_quant", "t55_encoding_qc",
-    "n34_matryoshka_recall", "i3_canary_drift", "t56_encoding_repair",
+    "x9_curation_manifest", "d22_span_attribution", "n32_scalar_quant",
+    "t55_encoding_qc", "n34_matryoshka_recall", "t56_encoding_repair",
     "n35_matryoshka_topk",
     // d23's best-match window + blocked self-join, d24's blocked
     // containment join, t57's per-doc bottom-k window, a22's grouped

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Streams
 
-/** Structured Streaming behavior: AvailableNow windowed aggregation must
-  * equal its batch twin; the stateful sessionizer must match the batch
-  * window-function sessionization; the incremental upsert must be
-  * last-writer-wins and re-run stable. */
+/** Structured Streaming behavior: the stateful sessionizer must match
+  * the batch window-function sessionization, and every incremental
+  * rollup or index maintainer must converge to its batch twin. */
 class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def tmp(name: String): String = {
@@ -22,30 +21,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$d/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     d
-  }
-
-  test("windowed counts over AvailableNow == batch groupBy") {
-    val out = tmp("graft_stream_sink")
-    val q = Streams.windowedCounts(Streams.eventStream(spark, srcDir))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft_stream_ckpt"))
-      .format("memory").queryName("win_counts")
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("win_counts")
-      .groupBy("event_type").agg(sum("cnt").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val batch = Tables.events(spark, sf)
-      .groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // A watermark in append mode holds back the final (open) window until
-    // a later batch advances the watermark; with AvailableNow on a static
-    // dir every closed window must match the batch counts.
-    streamed.foreach { case (k, n) => assert(n <= batch(k)) }
-    assert(streamed.values.sum >= batch.values.sum * 8 / 10,
-      s"closed windows cover too little: $streamed vs $batch")
   }
 
   test("mapGroupsWithState sessionizer matches batch sessionization counts") {
@@ -160,78 +135,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       s"late-arriving user must get a NEW session after eviction: $sessionsU1")
   }
 
-  test("streaming dedup drops watermark-horizon re-deliveries (d1 twin)") {
-    // Source with planted duplicate deliveries: every event_id < 50 is
-    // delivered twice (identical payload — an at-least-once redelivery).
-    val dupDir = tmp("graft_dedup_src")
-    val base = Tables.events(spark, sf)
-    base.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("user_id"), col("event_type"), col("value"), col("props"))
-      .unionByName(base.where(col("event_id") < 50)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"), col("props")))
-      .write.mode("overwrite").parquet(dupDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_us",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema).parquet(dupDir)
-      .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
-    val q = Streams.dedupStream(stream).writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft_dedup_ckpt"))
-      .format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    val out = spark.table("dedup_out")
-    assert(out.groupBy("event_id").count().where(col("count") > 1).isEmpty,
-      "duplicate event_ids survived the streaming dedup")
-    assert(out.count() == base.count(),
-      "dedup dropped non-duplicate rows")
-  }
-
-  test("stream-stream interval join equals the batch interval join") {
-    val q = Streams.clickViewJoin(Streams.eventStream(spark, srcDir))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft_ssj_ckpt"))
-      .format("memory").queryName("ssj_out")
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("ssj_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ev = Tables.events(spark, sf)
-    val batch = ev.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .join(ev.where(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
-          col("ts").as("view_ts")),
-        col("user_id") === col("view_user") &&
-          col("click_ts") >= col("view_ts") &&
-          col("click_ts") < col("view_ts") + expr("INTERVAL 1 HOUR"))
-      .select("click_id", "user_id", "view_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(batch.nonEmpty, "vacuous: no click-view pairs within the hour")
-    // watermarks can hold back only pairs near the final watermark; with
-    // AvailableNow over a static dir the joined set must match the batch
-    // join exactly for all emitted rows, and cover (nearly) all of it
-    assert(streamed.subsetOf(batch),
-      s"spurious streamed pairs: ${streamed -- batch}")
-    assert(streamed.size >= batch.size * 9 / 10,
-      s"stream join emitted ${streamed.size} of ${batch.size} pairs")
-  }
-
   test("incremental daily rollup z-scores equal the batch e3 drift path") {
     // two chunks split mid-stream: the split day's count spans batches,
     // so the reader MUST merge per-(type, day) deltas to agree with the
@@ -261,114 +164,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         .agg(count(lit(1)).as("cnt")))
       .collect().map(_.toString).sorted.toSeq
     assert(streamed == batch, "incremental drift scores != batch e3 path")
-    // e13 rides the SAME rollup: the global z-score monitor must also
-    // merge split-day partials exactly.
-    val e13s = Streams.readRateAnomaly(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val e13b = SparkEntry.queries("e13_rate_anomaly")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(e13s == e13b, "incremental rate anomaly != batch e13 path")
-    // e21/e22/a21 are further consumers of the same rollup: the
-    // forecast join, the weekday profile, and the co-movement moments
-    // must all merge split-day partials exactly.
-    for ((read, name) <- Seq(
-        (Streams.readForecastBaseline _, "e21_forecast_baseline"),
-        (Streams.readWeekdayProfile _, "e22_weekday_profile"),
-        (Streams.readDailyCorrelation _, "a21_daily_correlation"))) {
-      val s2 = read(spark, rollup).collect().map(_.toString).sorted.toSeq
-      val b2 = SparkEntry.queries(name)(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(s2 == b2, s"incremental twin != batch $name")
-    }
-  }
-
-  test("incremental cohort partials equal the batch e5 retention triangle") {
-    // the adversarial split for retention: a user's FIRST event lands
-    // in chunk 1 and later activity in chunk 2 (and the cut is mid
-    // event-id, so some users' first sighting is chunk 2) — the reader
-    // must re-minimize first-seen across batches or cohort weeks drift.
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    val cut = raw.agg(max(col("event_id"))).head().getLong(0) / 2
-    val src = tmp("graft_coh_src")
-    val rollup = tmp("graft_coh_roll") + "/rollup"
-    val ckpt = tmp("graft_coh_ckpt")
-    def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft_coh_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    addChunk(raw.where(col("event_id") <= cut), "chunk1.parquet")
-    Streams.incrementalCohortPartials(spark, src, rollup, ckpt)
-    addChunk(raw.where(col("event_id") > cut), "chunk2.parquet")
-    Streams.incrementalCohortPartials(spark, src, rollup, ckpt)
-    val streamed = Streams.readCohortRetention(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val batch = SparkEntry.queries("e5_cohort_retention")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed == batch, "incremental cohort retention != batch e5")
-    // e7 rides the SAME rollup: the partials' distinct (user, week)
-    // pairs are growth accounting's whole input, so the one incremental
-    // artifact must serve both read paths. Same adversarial split:
-    // users whose first sighting is chunk 2 must still classify NEW in
-    // their true first week, not re-classify per batch.
-    val growthStreamed = Streams.readGrowthAccounting(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val growthBatch = SparkEntry.queries("e7_growth_accounting")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(growthStreamed == growthBatch,
-      "incremental growth accounting != batch e7")
-  }
-
-  test("incremental (user, day) counts serve both e6 and e8 read paths") {
-    // mid-event-id cut: the same (user, day) spans both chunks, so the
-    // reader must MERGE count partials (e8) and DEDUP the pair (e6) —
-    // an off-by-one in either direction diverges from batch.
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    val cut = raw.agg(max(col("event_id"))).head().getLong(0) / 2
-    val src = tmp("graft_uday_src")
-    val rollup = tmp("graft_uday_roll") + "/rollup"
-    val ckpt = tmp("graft_uday_ckpt")
-    def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft_uday_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    addChunk(raw.where(col("event_id") <= cut), "chunk1.parquet")
-    Streams.incrementalUserDayCounts(spark, src, rollup, ckpt)
-    addChunk(raw.where(col("event_id") > cut), "chunk2.parquet")
-    Streams.incrementalUserDayCounts(spark, src, rollup, ckpt)
-    val e6s = Streams.readActiveUsers(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val e6b = SparkEntry.queries("e6_active_users")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(e6s == e6b, "incremental active users != batch e6")
-    val e8s = Streams.readDecayedActivity(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val e8b = SparkEntry.queries("e8_decayed_activity")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(e8s == e8b, "incremental decayed activity != batch e8")
-    // e15 is a third consumer of the same rollup: the engagement
-    // histogram depends only on the distinct (user, day) set.
-    val e15s = Streams.readPowerUserCurve(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val e15b = SparkEntry.queries("e15_power_user_curve")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(e15s == e15b, "incremental power-user curve != batch e15")
-    // e18 is a fourth consumer: streak islands depend only on the
-    // distinct (user, day) set, so the incremental rollup must
-    // reproduce the batch histogram exactly — even with a day split
-    // across the two micro-batches.
-    val e18s = Streams.readUserStreaks(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val e18b = SparkEntry.queries("e18_user_streaks")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(e18s == e18b, "incremental user streaks != batch e18")
   }
 
   test("index compaction: incremental batches collapse to the direct serving index") {
@@ -866,190 +661,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       Fts.termIndex(docs, "doc_id", Seq("text")), Seq("spar", "wind"))
       .collect().map(_.getLong(0)).toSet
     assert(probed == direct, "compacted-store probe differs from in-memory probe")
-  }
-
-  test("streaming warehouse append: corrected, partitioned, idempotent, prunable") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val target = tmp("graft_wh_stream") + "/entries"
-    val all = graft.entries.Fixture.entries
-    // Two REAL micro-batches: AvailableNow + a shared checkpoint makes
-    // the second call resume at batch 1 (both addData calls before one
-    // start would coalesce into a single batch 0).
-    val ckpt = tmp("graft_wh_ckpt")
-    val stream = MemoryStream[graft.entries.Entry]
-    stream.addData(all.take(10))
-    Streams.warehouseAppendStream(stream.toDF(), target, ckpt)
-    stream.addData(all.drop(10))
-    Streams.warehouseAppendStream(stream.toDF(), target, ckpt)
-    val got = spark.read.parquet(target)
-    // every fixture row lands exactly once, with the overlay applied
-    assert(got.count() == all.size.toLong)
-    val batchExpect = graft.entries.Normalize.withCorrectedDates(
-      spark, graft.entries.Fixture.df(spark))
-    val gotCorr = got.select("id", "corrected_request").as[(Long, Option[String])]
-      .collect().toMap
-    val wantCorr = batchExpect.select("id", "corrected_request")
-      .as[(Long, Option[String])].collect().toMap
-    assert(gotCorr == wantCorr)
-    // a year-filtered read prunes on the partition column
-    val q = got.where(col("request_year") === 2025)
-    q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*request_year.*"),
-      s"no request_year partition pruning:\n$plan")
-    // RETRY idempotency: re-feed batch 0's exact data with a fresh
-    // checkpoint (same batchId 0). Dynamic partition overwrite must
-    // replace only the (batch 0, year) partitions with identical
-    // content — static overwrite would wipe batch 1, append would
-    // duplicate batch 0.
-    val replay = MemoryStream[graft.entries.Entry]
-    replay.addData(all.take(10))
-    Streams.warehouseAppendStream(replay.toDF(), target, tmp("graft_wh_ckpt2"))
-    val after = spark.read.parquet(target)
-    assert(after.count() == all.size.toLong)
-    assert(after.select("id").distinct().count() == all.size.toLong)
-  }
-
-  test("warehouse compaction: cross-batch LWW, fewer files, pruning kept") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val staged = tmp("graft_whc_staged") + "/entries"
-    val compacted = tmp("graft_whc_out") + "/entries"
-    val ckpt = tmp("graft_whc_ckpt")
-    val all = graft.entries.Fixture.entries
-    // batch 0: the full corpus; batch 1: a NEWER revision of the first
-    // entry (mutated agency) — the re-delivery compaction must keep.
-    val stream = MemoryStream[graft.entries.Entry]
-    stream.addData(all)
-    Streams.warehouseAppendStream(stream.toDF(), staged, ckpt)
-    val revised = all.head.copy(agency = "Revised Agency Name")
-    stream.addData(Seq(revised))
-    Streams.warehouseAppendStream(stream.toDF(), staged, ckpt)
-    assert(spark.read.parquet(staged).count() == all.size + 1L) // staged keeps both
-    graft.entries.Warehouse.compactAppendStore(spark, staged, compacted)
-    val got = spark.read.parquet(compacted)
-    // one row per id, and the LATER batch's revision won
-    assert(got.count() == all.size.toLong)
-    assert(got.where(col("id") === all.head.id).select("agency")
-      .head().getString(0) == "Revised Agency Name")
-    // batch_id is gone from the serving layout; request_year remains
-    assert(!got.columns.contains("batch_id"))
-    // the compacted store has at most one data file per year partition
-    val years = new java.io.File(compacted).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("request_year="))
-    assert(years.nonEmpty)
-    years.foreach { dir =>
-      val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length <= 1, s"${dir.getName} not compacted: ${files.length} files")
-    }
-    // the serving read still prunes on request_year
-    val q = got.where(col("request_year") === 2025)
-    q.collect()
-    assert(q.queryExecution.executedPlan.toString
-      .matches("(?s).*PartitionFilters: \\[[^\\]]*request_year.*"),
-      "compacted store lost partition pruning")
-    // time travel: the batch-0 snapshot predates the revision; the
-    // batch-1 snapshot equals the compacted (current) state — and the
-    // batch bound prunes on the batch_id partition column.
-    val snap0 = graft.entries.Warehouse.snapshotAt(spark, staged, 0L)
-    assert(snap0.count() == all.size.toLong)
-    assert(snap0.where(col("id") === all.head.id).select("agency")
-      .head().getString(0) == all.head.agency)
-    val snap1 = graft.entries.Warehouse.snapshotAt(spark, staged, 1L)
-    assert(snap1.where(col("id") === all.head.id).select("agency")
-      .head().getString(0) == "Revised Agency Name")
-    val sp = snap0.queryExecution.executedPlan.toString
-    assert(sp.matches("(?s).*PartitionFilters: \\[[^\\]]*batch_id.*"),
-      s"snapshot bound not pruning on batch_id:\n$sp")
-  }
-
-  test("incremental upsert: last write wins and re-runs are stable") {
-    val target = tmp("graft_upsert_target") + "/t"
-    val n1 = Streams.incrementalUpsert(spark, srcDir, target, tmp("graft_upsert_ckpt1"))
-    val expected = Tables.events(spark, sf).select("event_id").distinct().count()
-    assert(n1 == expected)
-    // re-run with a fresh checkpoint: same source -> same target state
-    val n2 = Streams.incrementalUpsert(spark, srcDir, target, tmp("graft_upsert_ckpt2"))
-    assert(n2 == expected)
-    val dupKeys = spark.read.parquet(target)
-      .groupBy("event_id").count().where(col("count") > 1).count()
-    assert(dupKeys == 0)
-  }
-
-  test("streaming batched inference equals the batch scorer (i1 twin)") {
-    import graft.operators.Inference
-    def addChunk(dir: String, df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft_inf_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, Paths.get(s"$dir/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val src = tmp("graft_inf_src")
-    val out = tmp("graft_inf_root") + "/scores"
-    val ckpt = tmp("graft_inf_ckpt")
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    // two micro-batches cover the corpus; scores must equal ONE batch
-    // pass — scoring is per-row deterministic, so the batch split and
-    // the micro-batch boundary can never show through
-    addChunk(src, docs.where(col("doc_id") % 2 === 0), "c1.parquet")
-    Streams.incrementalScore(spark, src, out, ckpt)
-    addChunk(src, docs.where(col("doc_id") % 2 === 1), "c2.parquet")
-    Streams.incrementalScore(spark, src, out, ckpt)
-    def scoreSet(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id"), col("score_q")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val streamed = scoreSet(spark.read.parquet(out))
-    val direct = scoreSet(Inference.batchedInference(docs, batchSize = 32)(
-      Inference.surrogateScoreBatch))
-    assert(streamed == direct, "streamed scores != batch scores")
-    assert(streamed.size == docs.count(), "row accounting drifted across batches")
-  }
-
-  test("incremental cached inference reuses prior batches' content (i2 twin)") {
-    import graft.operators.Inference
-    def addChunk(dir: String, df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft_ci_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, Paths.get(s"$dir/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val src = tmp("graft_ci_src")
-    val out = tmp("graft_ci_root") + "/scores"
-    val cacheDir = tmp("graft_ci_root2") + "/cache"
-    val ckpt = tmp("graft_ci_ckpt")
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    // chunk 2 re-delivers 20 of chunk 1's documents under NEW doc_ids —
-    // the re-crawl case the cache exists for
-    val chunk1 = docs.where(col("doc_id") % 2 === 0)
-    val redelivered = chunk1.where(col("doc_id") < 40)
-      .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-    val chunk2 = docs.where(col("doc_id") % 2 === 1).unionByName(redelivered)
-    addChunk(src, chunk1, "c1.parquet")
-    Streams.incrementalCachedScore(spark, src, out, cacheDir, ckpt)
-    addChunk(src, chunk2, "c2.parquet")
-    Streams.incrementalCachedScore(spark, src, out, cacheDir, ckpt)
-    val streamed = spark.read.parquet(out)
-    // scores agree with one direct uncached pass over everything
-    val direct = Inference.batchedInference(
-      docs.unionByName(redelivered), batchSize = 32)(
-      Inference.surrogateScoreBatch)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = streamed.select(col("doc_id"), col("score_q"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == direct, "streamed cached scores != direct scores")
-    // every re-delivered doc was a cache HIT; chunk 1 (empty cache) had none
-    val hits = streamed.where(col("from_cache") === 1)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(hits == redelivered.select("doc_id").collect()
-      .map(_.getLong(0)).toSet,
-      "cache hits != the re-delivered content set")
   }
 
   test("incremental gram index compacts to the direct serving index (d21 twin)") {

@@ -128,6 +128,20 @@ class SyncSpec extends AnyFunSuite with SparkSuite {
     val entry = Sync.parseEntry(Sync.fixtureTransport(30L), 30L).get
     assert(entry.details.contains("Cost & schedule"))
     assert(entry.completion_date.isEmpty) // "not yet"
+    // Every character reference decodes, as `.text` does, BEFORE cleaning:
+    // decimal/hex refs, &nbsp; collapsed and trimmed like JS \s, the
+    // windows-1252 remap, and one pass only (`&amp;#233;` stays `&#233;`).
+    val refs = Sync.parseEntry(Sync.fixtureHtml("Jos&#233; &#X41;gency",
+      Seq("Organization:" -> "&nbsp;O&#x2019;Brien&nbsp;&nbsp;Law&#160;",
+        "Fee:" -> "&amp;#233; &amp;amp; &#150;"),
+      Seq("Subject" -> "caf&#xE9;\u2003m&#000000233;nu", "Details" -> "&lt;b&gt; &quot;x&quot; &apos;y&#39;")),
+      41L).get
+    assert(refs.agency == "José Agency")
+    assert(refs.organization.contains("O’Brien Law"))
+    assert(refs.fee.contains("&#233; &amp; –"))
+    assert(refs.subject.contains("café ménu"))
+    assert(refs.details.contains("<b> \"x\" 'y'"))
+    assert(Sync.cleanText("\u00A0 a\u2003\u00A0b \uFEFF") == "a b")
   }
 
   test("parseEntry: 404-shaped page has no fields -> None") {
