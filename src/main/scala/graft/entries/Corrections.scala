@@ -60,8 +60,8 @@ object Corrections {
     if (s == null) null
     else graft.functions.Text.normalizeAgencyName(s, real.aliasGroups))
 
-  /** Broadcastable real date-patch overlay (fixture twin:
-    * Normalize.correctionsDf). */
+  /** Broadcastable real date-patch overlay (its fixture counterpart is
+    * Normalize's map-literal date lookup). */
   def correctionsDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     real.dateCorrections.toDF("id", "req_fix", "comp_fix")

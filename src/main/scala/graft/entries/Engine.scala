@@ -1,6 +1,7 @@
 package graft.entries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Cols
@@ -38,11 +39,6 @@ object Engine {
     q.toLowerCase.split("\\s+").toSeq
       .map(_.replaceAll("[^a-z0-9]", "")).filter(_.nonEmpty).distinct
 
-  /** Corrected-date columns — single-sourced in Normalize (the
-    * Warehouse writes the same view). */
-  private def withCorrected(spark: SparkSession, entries: DataFrame): DataFrame =
-    Normalize.withCorrectedDates(spark, entries)
-
   /** Sort dispatch (utils.ts:3-9, entries.ts:65-85). SQLite treats NULL
     * as smallest (first under ASC, last under DESC); id is the unique
     * tiebreak the reference gets implicitly from its rowid scan. */
@@ -63,36 +59,36 @@ object Engine {
     * as a stored index in the Fts.writeTermIndex layout (term_pfx
     * partitioning + within-file term sort). The sync job that writes the
     * entries store writes this beside it; [[listEntriesFiltered]] then
-    * probes the index instead of re-tokenizing the corpus per query.
-    * Corrections only overlay DATE columns, so the index over the raw
-    * store and over the corrected view are identical — built once here,
-    * never per-call. */
+    * probes the index on the driver (Fts.probeIds) instead of
+    * re-tokenizing the corpus per query. The corrections overlay
+    * rewrites no indexed text column, so the index over the raw store
+    * and over the corrected view are identical — built once here, never
+    * per-call. */
   def writeFtsIndex(spark: SparkSession, entries: DataFrame, path: String): Unit =
     Fts.writeTermIndex(Fts.termIndex(entries, "id", FtsCols), path)
 
   /** The shared filter pipeline of both pagination modes (entries.ts
-    * WHERE assembly, src/lib/db/entries.ts:29-63). With `ftsIndexPath`
-    * set (a [[writeFtsIndex]] store over the SAME entries corpus), the
-    * FTS predicate is answered from the maintained index — prefix
-    * probes prune on the term_pfx partition key (PlanSpec pins the
-    * PartitionFilters), and the per-query cost is the probe, not a
-    * corpus re-tokenization. The reference never recomputes its FTS
-    * table per query (triggers keep it current); at scale neither can
-    * this engine — the rebuild path (None) remains for ad-hoc frames
-    * that have no maintained store. */
+    * WHERE assembly, src/lib/db/entries.ts:29-63). The corrected dates
+    * are map-literal expressions (Normalize.withCorrectedDates), so the
+    * filtered frame is one scan with no join. With `ftsIndexPath` set (a
+    * [[writeFtsIndex]] store over the SAME entries corpus), the FTS
+    * predicate is answered on the driver before the frame is built:
+    * Fts.probeIds reads only the query's term_pfx directories (one job,
+    * none when a directory is missing), and its ids become an
+    * `id IN (...)` filter. The reference never recomputes its FTS table
+    * per query (triggers keep it current); at scale neither can this
+    * engine — the rebuild path (None) remains for ad-hoc frames that
+    * have no maintained store. */
   def listEntriesFiltered(spark: SparkSession, entries: DataFrame,
                           opts: SearchOptions,
                           ftsIndexPath: Option[String] = None): DataFrame = {
-    var df = withCorrected(spark, entries)
+    var df = Normalize.withCorrectedDates(entries)
 
-    // P6/J1 — FTS prefix-AND semi-join: maintained index when wired,
-    // per-call rebuild otherwise
+    // P6/J1 — FTS prefix-AND: the maintained index probed on the driver
+    // when wired, a per-call rebuild and semi-join otherwise
     opts.q.map(ftsPrefixes).filter(_.nonEmpty).foreach { prefixes =>
       df = ftsIndexPath match {
-        case Some(p) =>
-          val ids = Fts.matchingIdsPersistent(Fts.readTermIndex(spark, p), prefixes)
-          df.join(ids.withColumnRenamed("id", "id__m"),
-            col("id") === col("id__m"), "left_semi")
+        case Some(p) => df.where(col("id").isInCollection(Fts.probeIds(spark, p, prefixes)))
         case None => Fts.search(df, "id", FtsCols, prefixes)
       }
     }
@@ -124,8 +120,7 @@ object Engine {
     val slice = filtered.orderBy(sortKeys(opts.sort): _*)
       .offset((page - 1) * opts.pageSize).limit(opts.pageSize)
     // P9 — row post-processor on the returned page only
-    Normalize.normalizeEntries(spark,
-      slice.drop("corrected_request", "corrected_completion"))
+    Normalize.normalizeEntries(slice.drop("corrected_request", "corrected_completion"))
   }
 
   /** The page materializes on the driver, so pageSize is a driver-memory
@@ -140,22 +135,23 @@ object Engine {
                   opts: SearchOptions,
                   ftsIndexPath: Option[String] = None): ListPage = {
     requirePageSize(opts.pageSize)
-    // A1/O2 — count, clamp the requested page, slice (entries.ts:102-116).
-    // One cached filtered plan feeds both actions (the reference's two
-    // SQLite round-trips share nothing).
-    val df = listEntriesFiltered(spark, entries, opts, ftsIndexPath).persist()
-    try {
-      val total = df.count()
-      val totalPages = math.max(math.ceil(total / opts.pageSize.toDouble).toInt, 1)
-      val page = math.min(math.max(opts.page, 1), totalPages)
-      val rows = pageSlice(spark, df, opts, page)
-      // Materialize the bounded page (<= pageSize rows) so the cached
-      // filtered frame is released before returning — every ListPage field
-      // is already eager (count), and callers that only consume `rows`
-      // must not accumulate executor storage across repeated Engine calls.
-      ListPage(spark.createDataFrame(rows.collectAsList(), rows.schema),
-        total, page, totalPages)
-    } finally { df.unpersist(); () }
+    // A1/O2 — count, clamp the requested page, slice (entries.ts:102-116):
+    // the reference's two SQLite statements as two Spark jobs. The count
+    // runs the RDD of the filtered plan projected to no columns, so the
+    // scan reads only the filter columns (one job, no exchange);
+    // Dataset.count would add an aggregate and, under AQE, a second job.
+    // It runs as its own SQL execution, so listeners and the SQL UI see
+    // its scan.
+    val df = listEntriesFiltered(spark, entries, opts, ftsIndexPath)
+    val qe = df.select().queryExecution
+    val total = SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
+    val totalPages = math.max(math.ceil(total / opts.pageSize.toDouble).toInt, 1)
+    val page = math.min(math.max(opts.page, 1), totalPages)
+    val rows = pageSlice(spark, df, opts, page)
+    // Materialize the bounded page (<= pageSize rows): every ListPage field
+    // is eager, so a caller never re-runs the slice.
+    ListPage(spark.createDataFrame(rows.collectAsList(), rows.schema),
+      total, page, totalPages)
   }
 
   /** Keyed-cursor pagination — the at-scale replacement for OFFSET depth
@@ -199,8 +195,7 @@ object Engine {
     }
     val page = base.where(after)
       .orderBy(sortKeys(opts.sort): _*).limit(opts.pageSize)
-    Normalize.normalizeEntries(spark,
-      page.drop("corrected_request", "corrected_completion"))
+    Normalize.normalizeEntries(page.drop("corrected_request", "corrected_completion"))
   }
 
   /** distinctResolutions (entries.ts:180-187). */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{Cols, Text}
 import graft.util.SqlLit
+import scala.reflect.runtime.universe.TypeTag
 
 /** Reusable entries-domain transforms: the corrections overlay + canonical
   * agency identity every reference row passes through
@@ -23,44 +24,44 @@ object Normalize {
   val agencyTitleUdf = udf((s: String) =>
     if (s == null) null else Text.agencyIdentity(s, aliasGroups)._1)
 
-  def correctionsDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    dateCorrections.toDF("id", "req_fix", "comp_fix")
-  }
+  /** The fixture's corrections as literal lookup maps, built once:
+    * id -> patched request / completion date, organization -> remap. */
+  private val reqFixes: Map[Long, String] =
+    dateCorrections.collect { case (id, Some(d), _) => id -> d }.toMap
+  private val compFixes: Map[Long, String] =
+    dateCorrections.collect { case (id, _, Some(d)) => id -> d }.toMap
+  private val orgFixes: Map[String, String] = orgCorrections.toMap
 
-  def orgCorrectionsDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    orgCorrections.toDF("org_from", "org_to")
-  }
+  /** `fixes(key)` when the map holds `key`, else the column `c` itself
+    * (applyCorrections' `patch ?? value`, corrections.ts:70-88). A
+    * map-literal lookup is a plain expression: no side relation, no
+    * broadcast, no extra Spark job. An empty map leaves `c` untouched. */
+  private def overlay[K: TypeTag](fixes: Map[K, String], key: Column, c: String): Column =
+    if (fixes.isEmpty) col(c)
+    else coalesce(try_element_at(typedLit(fixes), key), col(c))
 
-  /** P9 — normalizeEntry as one shared view-level transform (broadcast
-    * joins + coalesce; the apostrophe cleanup and canonicalization are
-    * the UDF surface). Applied once in the view, not per query. */
-  def normalizeEntries(spark: SparkSession, df: DataFrame): DataFrame = {
+  /** P9 — normalizeEntry as one shared view-level transform: the date
+    * patches and the organization remap as map-literal lookups, then the
+    * apostrophe cleanup and canonicalization (the UDF surface). Applied
+    * once in the view, not per query. */
+  def normalizeEntries(df: DataFrame): DataFrame = {
     val cleaned = regexp_replace(col("agency"), "'{2,}", "'")
     df
-      .join(broadcast(correctionsDf(spark)), Seq("id"), "left")
-      .withColumn("request_date", coalesce(col("req_fix"), col("request_date")))
-      .withColumn("completion_date", coalesce(col("comp_fix"), col("completion_date")))
-      .drop("req_fix", "comp_fix")
-      .join(broadcast(orgCorrectionsDf(spark)),
-        col("organization") === col("org_from"), "left")
-      .withColumn("organization", coalesce(col("org_to"), col("organization")))
-      .drop("org_from", "org_to")
+      .withColumn("request_date", overlay(reqFixes, col("id"), "request_date"))
+      .withColumn("completion_date", overlay(compFixes, col("id"), "completion_date"))
+      .withColumn("organization", overlay(orgFixes, col("organization"), "organization"))
       .withColumn("agency", agencyNameUdf(cleaned))
   }
 
   /** Corrected-date columns for filter/sort (correctedDateExpr,
-    * src/lib/db/shared.ts:55-66) — broadcast overlay + coalesce. The
-    * single source of the corrected view: the Engine filter pipeline
-    * and the partitioned Warehouse both read THIS, so the overlay
-    * semantics cannot drift between the two paths. */
-  def withCorrectedDates(spark: SparkSession, entries: DataFrame): DataFrame =
+    * src/lib/db/shared.ts:55-66): the same map-literal lookups as
+    * [[normalizeEntries]]. The single source of the corrected view: the
+    * Engine filter pipeline and the partitioned Warehouse both read
+    * THIS, so the overlay semantics cannot drift between the two paths. */
+  def withCorrectedDates(entries: DataFrame): DataFrame =
     entries
-      .join(broadcast(correctionsDf(spark)), Seq("id"), "left")
-      .withColumn("corrected_request", coalesce(col("req_fix"), col("request_date")))
-      .withColumn("corrected_completion", coalesce(col("comp_fix"), col("completion_date")))
-      .drop("req_fix", "comp_fix")
+      .withColumn("corrected_request", overlay(reqFixes, col("id"), "request_date"))
+      .withColumn("corrected_completion", overlay(compFixes, col("id"), "completion_date"))
 
   /** Canonical (name, slug) identity columns (agencyIdentity,
     * src/lib/db/shared.ts:14-19), on the apostrophe-cleaned raw agency. */
@@ -192,19 +193,11 @@ object EntryQueries extends graft.QueryModule {
          |LEFT JOIN ${SqlLit.values(orgCorrections.map(t => Seq[Any](t._1, t._2)), "oc", Seq("org_from", "org_to"))}
          |  ON e.organization = oc.org_from
          |JOIN $identitySql ON e.agency = ident.raw_agency""".stripMargin)) { (s, d) =>
-      // The projection reports identity.name as the canonical agency so
-      // the oracle's VALUES identity map applies; normalizeEntries'
+      // The served overlay (normalizeEntries) with the projection
+      // reporting identity.name as the canonical agency, so the oracle's
+      // VALUES identity map applies; normalizeEntries'
       // normalizeAgencyName output itself is pinned by ScalaTest goldens.
-      val base = Fixture.df(s)
-      Normalize.withIdentity(
-        base.join(broadcast(Normalize.correctionsDf(s)), Seq("id"), "left")
-          .withColumn("request_date", coalesce(col("req_fix"), col("request_date")))
-          .withColumn("completion_date", coalesce(col("comp_fix"), col("completion_date")))
-          .drop("req_fix", "comp_fix")
-          .join(broadcast(Normalize.orgCorrectionsDf(s)),
-            col("organization") === col("org_from"), "left")
-          .withColumn("organization", coalesce(col("org_to"), col("organization")))
-          .drop("org_from", "org_to"))
+      Normalize.normalizeEntries(Normalize.withIdentity(Fixture.df(s)))
         .select(col("id"), col("name").as("agency"), col("organization"),
           col("request_date"), col("completion_date"), col("resolution"))
     },
@@ -230,10 +223,7 @@ object EntryQueries extends graft.QueryModule {
          |SELECT id, agency, corrected_request, resolution, total FROM w WHERE rn <= 3""".stripMargin
     }) { (s, d) =>
       val cands = Normalize.aliasCandidates("DEP").map(_.toLowerCase)
-      val base = Fixture.df(s)
-        .join(broadcast(Normalize.correctionsDf(s)), Seq("id"), "left")
-        .withColumn("corrected_request", coalesce(col("req_fix"), col("request_date")))
-      val filtered = base
+      val filtered = Normalize.withCorrectedDates(Fixture.df(s))
         .where(lower(col("agency")).isin(cands: _*) &&
           col("resolution").isin("Granted", "Granted in part") &&
           col("corrected_request") >= "2024-01-01" && col("corrected_request") <= "2025-05-31")

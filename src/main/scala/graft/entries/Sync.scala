@@ -20,11 +20,17 @@ object Sync {
       added: Long, checked: Long, startFrom: Long, lastCheckedId: Long,
       driftTolerance: Long) // reference src/lib/types.ts:67-73
 
+  private val NonKeyRun = Pattern.compile("[^a-z0-9]+")
+  private val EdgeUnderscores = Pattern.compile("^_+|_+$")
+
   /** normalizeKey — reference src/lib/sync.ts:50-57. */
-  def normalizeKey(input: String): String =
-    input.replace(":", "").trim.toLowerCase
-      .replaceAll("[^a-z0-9]+", "_")
-      .replaceAll("^_+|_+$", "")
+  def normalizeKey(input: String): String = {
+    val key = NonKeyRun.matcher(input.replace(":", "").trim.toLowerCase).replaceAll("_")
+    EdgeUnderscores.matcher(key).replaceAll("")
+  }
+
+  private val Mdy = "^(\\d{1,2})/(\\d{1,2})/(\\d{4})$".r
+  private val IsoDate = Pattern.compile("^\\d{4}-\\d{2}-\\d{2}$")
 
   /** normalizeDate — reference src/lib/sync.ts:59-76. Pure string
     * transform, deliberately no calendar validation. */
@@ -32,11 +38,10 @@ object Sync {
     if (value == null) return None
     val trimmed = value.trim
     if (trimmed.isEmpty) return None
-    val mdy = "^(\\d{1,2})/(\\d{1,2})/(\\d{4})$".r
     trimmed match {
-      case mdy(m, d, y) =>
+      case Mdy(m, d, y) =>
         Some(f"$y-${m.toInt}%02d-${d.toInt}%02d")
-      case _ if trimmed.matches("^\\d{4}-\\d{2}-\\d{2}$") => Some(trimmed)
+      case _ if IsoDate.matcher(trimmed).matches() => Some(trimmed)
       case _ => None
     }
   }
@@ -118,10 +123,12 @@ object Sync {
   private val RequestItemsRe = Pattern.compile(
     s"""${classTok("container-requestitems")}([\\s\\S]*)""")
 
+  private val Tag = Pattern.compile("<[^>]+>")
+
   /** `cleanText(node.text)` for a captured inner-HTML span: drop tags,
     * keep their text content, decode character references, then clean. */
   private def nodeText(s: String): String =
-    cleanText(decodeEntities(s.replaceAll("<[^>]+>", " ")))
+    cleanText(decodeEntities(Tag.matcher(s).replaceAll(" ")))
 
   /** S2 — parseEntry: label/value DOM pairs + panel sections -> typed
     * record (reference src/lib/sync.ts:83-130). Regex-driven over the

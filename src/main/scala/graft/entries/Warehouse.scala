@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The partitioned entries store — the at-scale analog of the
   * reference's date B-tree indexes (migrations/0001_init.sql:19-23).
@@ -18,20 +18,32 @@ import org.apache.spark.sql.types.IntegerType
   */
 object Warehouse {
 
+  /** The corrected view with its request_year partition key. */
+  private def corrected(entries: DataFrame): DataFrame =
+    Normalize.withCorrectedDates(entries)
+      .withColumn("request_year",
+        substring(col("corrected_request"), 1, 4).cast(IntegerType))
+
   /** Write the corrected entries view partitioned by request year.
     * Rows with no request date land in the null partition — they are
     * still present for non-date reads (nothing is dropped at write). */
   def writeCorrected(spark: SparkSession, entries: DataFrame, path: String): Unit =
-    Normalize.withCorrectedDates(spark, entries)
-      .withColumn("request_year",
-        substring(col("corrected_request"), 1, 4).cast(IntegerType))
-      .write
+    corrected(entries).write
       .partitionBy("request_year")
       .mode(SaveMode.Overwrite)
       .parquet(path)
 
+  /** What [[writeCorrected]] writes for an [[Entry]] corpus: its own
+    * projection's schema over no rows (analysis only, no job), with the
+    * request_year partition key last as a partitioned read places it.
+    * Reading with it skips the footer-inference job a bare
+    * `spark.read.parquet` runs. */
+  def schema(spark: SparkSession): StructType =
+    StructType(corrected(spark.createDataFrame(Seq.empty[Entry])).schema
+      .map(_.copy(nullable = true)))
+
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(schema(spark)).parquet(path)
 
   /** P3 over the store: an ISO date range on the corrected column with
     * the year bounds lifted onto the partition key — year directories

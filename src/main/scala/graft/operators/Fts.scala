@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.Path
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.Cols
 
@@ -149,16 +154,78 @@ object Fts {
       .sortWithinPartitions("term")
       .write.mode("overwrite").partitionBy("term_pfx").parquet(path)
 
-  def readTermIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The data columns of a [[writeTermIndex]] store over a BIGINT id
+    * (term_pfx is its directory key): [[termIndex]]'s own output schema,
+    * taken from its plan over no rows, so the layout has one definition.
+    * Reading with it skips footer inference. */
+  private def termIndexSchema(spark: SparkSession): StructType =
+    StructType(termIndex(spark.range(0).select(col("id"), lit("").as("text")),
+      "id", Seq("text")).schema.map(_.copy(nullable = true)))
 
-  /** [[matchingIds]] against a written [[writeTermIndex]] store, with
-    * the probes lifted onto the partition key: only the first-char
-    * directories of the query's prefixes are ever opened, exactly like
-    * the warehouse's request_year pruning. */
-  def matchingIdsPersistent(index: DataFrame, prefixes: Seq[String]): DataFrame =
-    matchingIds(index.where(
-      col("term_pfx").isin(prefixes.map(_.take(1)).distinct: _*)), prefixes)
+  /** The rows of a [[writeTermIndex]] store at `path` whose term matches
+    * any of `prefixes`. Only the prefixes' `term_pfx=<c>` directories are
+    * opened, and the sargable ranges are pushed to the scan. None when a
+    * prefix's directory does not exist: no term starts with that prefix.
+    * A missing index root fails. */
+  private[graft] def prefixScan(spark: SparkSession, path: String,
+                                prefixes: Seq[String]): Option[DataFrame] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) throw new FileNotFoundException(s"no term index at $path")
+    val dirs = prefixes.map(_.take(1)).distinct.map(c => new Path(root, s"term_pfx=$c"))
+    if (!dirs.forall(fs.exists)) None
+    else Some(spark.read.schema(termIndexSchema(spark)).parquet(dirs.map(_.toString): _*)
+      .where(prefixes.map(p => prefixPred(col("term"), p)).reduce(_ || _)))
+  }
+
+  /** Most distinct ids a [[probeIds]] query may match. The answer becomes
+    * an `id IN (...)` literal in the served plan, so a prefix this
+    * unselective (one character over a large corpus) fails the search
+    * instead of growing driver memory and every task's plan with the
+    * corpus. Each scan task stops one id past it, so the driver holds at
+    * most the scan's partition count times this. */
+  val MaxProbeIds: Int = 1 << 20
+
+  /** [[matchingIds]] against a written [[writeTermIndex]] store, answered
+    * on the driver. One scan of the query's prefix directories tags each
+    * posting with a bitmask of the prefixes its term matches; each task
+    * ORs the masks per id, and the driver keeps the ids whose merged mask
+    * holds every prefix. At most one Spark job, and none when a prefix's
+    * directory is missing. Fails when more than `maxIds` distinct ids
+    * match any prefix. */
+  def probeIds(spark: SparkSession, path: String, prefixes0: Seq[String],
+               maxIds: Int = MaxProbeIds): Set[Long] = {
+    val prefixes = prefixes0.distinct
+    require(prefixes.nonEmpty)
+    prefixScan(spark, path, prefixes).fold(Set.empty[Long]) { scan =>
+      val groups = prefixes.grouped(64).toSeq // one Long mask per 64 prefixes
+      val masks = groups.map(_.zipWithIndex.map { case (p, i) =>
+        when(prefixPred(col("term"), p), lit(1L << i)).otherwise(lit(0L))
+      }.reduce(_ bitwiseOR _))
+      val n = masks.size
+      val qe = scan.select(col("id") +: masks: _*).queryExecution
+      val parts = SQLExecution.withNewExecutionId(qe, Some("fts probe")) {
+        qe.toRdd.mapPartitions { rows =>
+          val acc = mutable.LongMap.empty[Array[Long]]
+          while (rows.hasNext && acc.size <= maxIds) {
+            val r = rows.next()
+            val m = acc.getOrElseUpdate(r.getLong(0), new Array[Long](n))
+            for (k <- 0 until n) m(k) |= r.getLong(k + 1)
+          }
+          Iterator.single(acc.toArray)
+        }.collect()
+      }
+      val merged = mutable.LongMap.empty[Array[Long]]
+      for (part <- parts; (id, m) <- part) {
+        val acc = merged.getOrElseUpdate(id, new Array[Long](n))
+        for (k <- 0 until n) acc(k) |= m(k)
+      }
+      require(merged.size <= maxIds, s"FTS prefixes ${prefixes.mkString(" ")} " +
+        s"match more than $maxIds ids; a longer prefix narrows the search")
+      val full = groups.map(g => if (g.size == 64) -1L else (1L << g.size) - 1)
+      merged.iterator.collect { case (id, m) if m.sameElements(full) => id }.toSet
+    }
+  }
 
   // --- Incrementally maintained index --------------------------------------
 
@@ -288,10 +355,11 @@ object FtsQueries extends graft.QueryModule {
 
     // P6f — the SAME search routed through the PERSISTENT index: the
     // term index is written partitioned by first char + sorted by term
-    // (Fts.writeTermIndex), read back, and probed with the prefixes
-    // lifted onto the partition key — so the gate row proves the
-    // written layout round-trips losslessly (PlanSpec separately pins
-    // that the probe actually prunes partitions and pushes the range).
+    // (Fts.writeTermIndex) and probed through the serving route
+    // (Fts.probeIds: only the prefixes' directories are read) — so the
+    // gate row proves the written layout round-trips losslessly (PlanSpec
+    // separately pins that the probe opens only those directories and
+    // pushes the range).
     graft.QueryDef("p6f_fts_persistent", Some(sparWindOracle))((s, d) => {
       // Written ONCE per (JVM, data dir) — the index is the amortized
       // artifact (the nightly build's output), not per-query work;
@@ -302,11 +370,8 @@ object FtsQueries extends graft.QueryModule {
           Fts.termIndex(Tables.documents(s, dd), "doc_id", Seq("text")), p)
         p
       })
-      val ids = Fts.matchingIdsPersistent(
-        Fts.readTermIndex(s, path), Seq("spar", "wind"))
       Tables.documents(s, d)
-        .join(ids.withColumnRenamed("id", "doc_id__m"),
-          col("doc_id") === col("doc_id__m"), "left_semi")
+        .where(col("doc_id").isInCollection(Fts.probeIds(s, path, Seq("spar", "wind"))))
         .select("doc_id", "lang", "source")
     }),
 

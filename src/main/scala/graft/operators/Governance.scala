@@ -475,11 +475,8 @@ object GovernanceQueries extends graft.QueryModule {
           tombstonePath = Some(s"$root/tombstones"))
         s"$root/serving"
       })
-      val ids = Fts.matchingIdsPersistent(
-        Fts.readTermIndex(s, path), Seq("spar", "wind"))
       Tables.documents(s, d)
-        .join(ids.withColumnRenamed("id", "doc_id__m"),
-          col("doc_id") === col("doc_id__m"), "left_semi")
+        .where(col("doc_id").isInCollection(Fts.probeIds(s, path, Seq("spar", "wind"))))
         .select("doc_id", "lang", "source")
     }),
 
@@ -509,11 +506,8 @@ object GovernanceQueries extends graft.QueryModule {
             .select(col("doc_id").as("purge_id")))
         s"$root/purged"
       })
-      val ids = Fts.matchingIdsPersistent(
-        Fts.readTermIndex(s, path), Seq("spar", "wind"))
       Tables.documents(s, d)
-        .join(ids.withColumnRenamed("id", "doc_id__m"),
-          col("doc_id") === col("doc_id__m"), "left_semi")
+        .where(col("doc_id").isInCollection(Fts.probeIds(s, path, Seq("spar", "wind"))))
         .select("doc_id", "lang", "source")
     }),
 

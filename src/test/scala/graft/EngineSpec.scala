@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.entries.{Engine, Fixture, Normalize, SearchOptions}
+import graft.entries.{Engine, Entry, Fixture, ListPage, Normalize, SearchOptions, Warehouse}
 import graft.functions.Text
+import graft.operators.Fts
 
 /** The parameterized listEntries engine vs an independent in-memory
   * model of the reference semantics (filters, corrected dates, sort
@@ -127,17 +130,110 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
     // The reference's trigger-kept FTS5 table never recomputes per query
     // (migrations/0002_fts.sql:17-34); the maintained-index route must be
     // a drop-in for the rebuild route on every FTS shape the spec pins.
-    val path = util.TmpRoot("engine-fts") + "/terms"
-    Engine.writeFtsIndex(spark, Fixture.df(spark), path)
-    for (q <- Seq("Spark Wind", "spark", "wind window", "spark spark", "zzz-none")) {
-      val opts = SearchOptions(q = Some(q), pageSize = 50)
-      val direct = Engine.listEntries(spark, Fixture.df(spark), opts)
-      val indexed = Engine.listEntries(spark, Fixture.df(spark), opts, Some(path))
+    val root = util.TmpRoot("engine-fts")
+    def sameAsRebuild(corpus: DataFrame, path: String, q: String,
+                      pageSize: Int = 50, page: Int = 1): Unit = {
+      val opts = SearchOptions(q = Some(q), pageSize = pageSize, page = page)
+      val direct = Engine.listEntries(spark, corpus, opts)
+      val indexed = Engine.listEntries(spark, corpus, opts, Some(path))
       assert(indexed.total == direct.total, s"total drift for '$q'")
+      assert(indexed.page == direct.page, s"page clamp drift for '$q'")
       assert(indexed.rows.select("id").collect().map(_.getLong(0)).toSeq ==
         direct.rows.select("id").collect().map(_.getLong(0)).toSeq,
         s"page drift for '$q'")
     }
+    val fixture = Fixture.df(spark)
+    val path = root + "/terms"
+    Engine.writeFtsIndex(spark, fixture, path)
+    for (q <- Seq("Spark Wind", "spark", "wind window", "spark spark", "zzz-none"))
+      sameAsRebuild(fixture, path, q)
+    // prefixes in two directories plus one that has no directory
+    assert(!new java.io.File(s"$path/term_pfx=x").exists)
+    sameAsRebuild(fixture, path, "spark wind xylo")
+    // a searched page past the end clamps to the last page
+    sameAsRebuild(fixture, path, "spark", pageSize = 1, page = 5)
+    // digit-leading prefixes: every document also holds its id as a term
+    val numbered = fixture.withColumn("details",
+      org.apache.spark.sql.functions.concat_ws(" ",
+        org.apache.spark.sql.functions.col("details"),
+        org.apache.spark.sql.functions.col("id")))
+    Engine.writeFtsIndex(spark, numbered, root + "/numbered")
+    for (q <- Seq("2", "1 spark", "26 discharge"))
+      sameAsRebuild(numbered, root + "/numbered", q)
+    // an index written over an empty corpus holds no prefix directory
+    val empty = fixture.limit(0)
+    Engine.writeFtsIndex(spark, empty, root + "/empty")
+    sameAsRebuild(empty, root + "/empty", "spark")
+    // a missing index root is an error, not an empty result
+    intercept[java.io.FileNotFoundException] {
+      Engine.listEntries(spark, fixture, SearchOptions(q = Some("spark")),
+        Some(root + "/missing"))
+    }
+  }
+
+  /** The fixture as parquet read back with its known schema, plus its FTS
+    * index: the read itself runs no job, so a count is the route's own. */
+  private lazy val stored: (DataFrame, String) = {
+    val root = util.TmpRoot("engine-jobs")
+    Fixture.df(spark).write.parquet(root + "/entries")
+    val entries = spark.read.schema(Encoders.product[Entry].schema).parquet(root + "/entries")
+    Engine.writeFtsIndex(spark, entries, root + "/terms")
+    (entries, root + "/terms")
+  }
+
+  private def jobs[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCount(spark.sparkContext)(body)
+
+  private def pageIds(p: ListPage): Seq[Long] =
+    p.rows.select("id").collect().map(_.getLong(0)).toSeq
+
+  test("job count: a list page runs 2 Spark jobs, a page past the end 2") {
+    val (entries, _) = stored
+    val (first, n1) = jobs(Engine.listEntries(spark, entries, SearchOptions(pageSize = 5)))
+    assert(pageIds(first) == expectedIds(SearchOptions(pageSize = 5))._1)
+    assert(n1 == 2, "list page")
+    val past = SearchOptions(pageSize = 5, page = 99)
+    val (last, n2) = jobs(Engine.listEntries(spark, entries, past))
+    assert(last.page == 6 && pageIds(last) == expectedIds(past)._1)
+    assert(n2 == 2, "page past the end")
+  }
+
+  test("job count: an indexed 2-word search runs 3 Spark jobs, a missing prefix at most 1") {
+    val (entries, terms) = stored
+    val (hit, n1) = jobs(Engine.listEntries(spark, entries,
+      SearchOptions(q = Some("spark wind")), Some(terms)))
+    assert(hit.total == 1 && pageIds(hit) == Seq(14L))
+    assert(n1 == 3, "indexed 2-word search")
+    val (miss, n2) = jobs(Engine.listEntries(spark, entries,
+      SearchOptions(q = Some("spark xylo")), Some(terms)))
+    assert(miss.total == 0 && pageIds(miss).isEmpty)
+    assert(n2 <= 1, "search whose prefix directory is missing")
+  }
+
+  test("job count: a cursor page runs 1 Spark job") {
+    val (entries, _) = stored
+    val (ids, n) = jobs(Engine.listEntriesAfter(spark, entries,
+      SearchOptions(sort = "id", pageSize = 5), None, 20L).select("id").collect().map(_.getLong(0)).toSeq)
+    assert(ids == Seq(19L, 18L, 17L, 16L, 15L))
+    assert(n == 1, "cursor page")
+  }
+
+  test("FTS probe fails loudly above its id bound") {
+    // The probe's answer becomes an id list in the served plan, so an
+    // unselective prefix must fail rather than grow with the corpus.
+    val (_, terms) = stored
+    assert(Fts.probeIds(spark, terms, Seq("s"), maxIds = 50).nonEmpty)
+    val e = intercept[IllegalArgumentException](Fts.probeIds(spark, terms, Seq("s"), maxIds = 2))
+    assert(e.getMessage.contains("more than 2 ids"))
+  }
+
+  test("Warehouse.read's schema matches what writeCorrected writes") {
+    // The read skips footer inference, so the schema it derives from the
+    // writer's projection must be the one parquet infers from the files.
+    val root = util.TmpRoot("engine-schemas")
+    def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSeq
+    Warehouse.writeCorrected(spark, Fixture.df(spark), root + "/warehouse")
+    assert(fields(spark.read.parquet(root + "/warehouse").schema) == fields(Warehouse.schema(spark)))
   }
 
   test("cursor pagination replays the exact OFFSET page sequence") {

@@ -149,23 +149,22 @@ class GovernanceSpec extends AnyFunSuite with SparkSuite {
     Fts.writeTermIndex(Fts.termIndex(docs, "doc_id", Seq("text")), s"$root/live")
     Governance.purgeStoredFtsIndex(spark, s"$root/live", s"$root/purged", ids)
 
-    val purged = Fts.readTermIndex(spark, s"$root/purged")
+    val purged = spark.read.parquet(s"$root/purged")
     // 1. not one term row of a purged doc survives — terms ARE the text
     assert(purged.where(col("id").isin(purgedIds.toSeq: _*)).count() == 0)
     // 2. non-purged rows intact, layout columns present (term_pfx kept)
-    val live = Fts.readTermIndex(spark, s"$root/live")
+    val live = spark.read.parquet(s"$root/live")
     assert(purged.count() ==
       live.where(!col("id").isin(purgedIds.toSeq: _*)).count())
     assert(purged.columns.contains("term_pfx"))
     // 3. unfindability through the serving path: the probe answered from
     // the purged store returns the live result minus exactly the purge set
-    def hits(ix: org.apache.spark.sql.DataFrame): Set[Long] =
-      Fts.matchingIdsPersistent(ix, Seq("spar", "wind"))
-        .select("id").as[Long].collect().toSet
-    val liveHits = hits(live)
+    def hits(store: String): Set[Long] =
+      Fts.probeIds(spark, s"$root/$store", Seq("spar", "wind"))
+    val liveHits = hits("live")
     assert(liveHits.intersect(purgedIds).nonEmpty,
       "probe must cover purged ids or the check is vacuous")
-    assert(hits(purged) == liveHits -- purgedIds,
+    assert(hits("purged") == liveHits -- purgedIds,
       "purged ids still findable through the stored FTS index")
   }
 
@@ -245,11 +244,10 @@ class GovernanceSpec extends AnyFunSuite with SparkSuite {
       .write.mode("overwrite").partitionBy("batch_id").parquet(purgedStore)
     val serving = s"$root/serving"
     Fts.compactFtsIndex(spark, purgedStore, serving)
-    val compacted = Fts.readTermIndex(spark, serving)
+    val compacted = spark.read.parquet(serving)
     assert(compacted.where(col("id").isin(purgedIds.toSeq: _*)).count() == 0,
       "FTS compaction resurrected purged ids")
-    val hits = Fts.matchingIdsPersistent(compacted, Seq("spar", "wind"))
-      .select("id").as[Long].collect().toSet
+    val hits = Fts.probeIds(spark, serving, Seq("spar", "wind"))
     assert(hits.intersect(purgedIds).isEmpty,
       "purged ids findable through the compacted FTS serving store")
   }
@@ -356,11 +354,10 @@ class GovernanceSpec extends AnyFunSuite with SparkSuite {
     // compaction-time suppression, end to end through the serving probe
     Fts.compactFtsIndex(spark, s"$root/inc", s"$root/serving",
       tombstonePath = Some(s"$root/tomb"))
-    val compacted = Fts.readTermIndex(spark, s"$root/serving")
+    val compacted = spark.read.parquet(s"$root/serving")
     assert(compacted.where(col("id").isin(purgedIds.toSeq: _*)).count() == 0,
       "tombstone-aware compaction resurrected purged ids")
-    val hits = Fts.matchingIdsPersistent(compacted, Seq("spar", "wind"))
-      .select("id").as[Long].collect().toSet
+    val hits = Fts.probeIds(spark, s"$root/serving", Seq("spar", "wind"))
     assert(hits.intersect(purgedIds).isEmpty,
       "purged ids findable through the tombstone-compacted serving store")
     // non-purged docs are untouched by the suppression

@@ -334,17 +334,20 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("persistent FTS index probes prune partitions AND push the term range") {
+    // p6f's probe (Fts.probeIds) reads the query's first-char
+    // directories directly, so the pruning shows as the files it opens.
     import graft.operators.Fts
     val path = java.nio.file.Files.createTempDirectory("graft_fts_plan").toString + "/terms"
     Fts.writeTermIndex(
       Fts.termIndex(Tables.documents(spark, sf), "doc_id", Seq("text")), path)
-    val q = Fts.matchingIdsPersistent(
-      Fts.readTermIndex(spark, path), Seq("spar", "wind"))
+    val q = Fts.prefixScan(spark, path, Seq("spar", "wind")).get
     q.collect()
+    // only the probe keys' directories are opened…
+    val files = q.inputFiles.toSeq
+    assert(files.nonEmpty && files.forall(f =>
+      f.contains("/term_pfx=s/") || f.contains("/term_pfx=w/")),
+      s"p6f: opened files outside term_pfx=s|w: $files")
     val p = q.queryExecution.executedPlan.toString
-    // the first-char probe keys reach the directory layout…
-    assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*term_pfx[^\\]]*\\].*"),
-      s"p6f: no term_pfx partition filter:\n$p")
     // …and the sargable prefix range reaches the parquet scan (no
     // closing-bracket anchor: plan toString truncates long lists).
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(term.*"),
@@ -371,15 +374,20 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("engine maintained-FTS route prunes the index on term_pfx") {
-    import graft.entries.{Engine, Fixture, SearchOptions}
+    // The engine probes the index on the driver (Fts.probeIds), reading
+    // the query's first-char directories directly: only term_pfx=s and
+    // term_pfx=w are opened, and the prefix range reaches the scan.
+    import graft.entries.{Engine, Fixture}
+    import graft.operators.Fts
     val path = java.nio.file.Files.createTempDirectory("graft_engfts_plan").toString + "/terms"
     Engine.writeFtsIndex(spark, Fixture.df(spark), path)
-    val q = Engine.listEntriesFiltered(spark, Fixture.df(spark),
-      SearchOptions(q = Some("spark wind")), Some(path))
+    val q = Fts.prefixScan(spark, path, Engine.ftsPrefixes("spark wind")).get
     q.collect()
+    val files = q.inputFiles.toSeq
+    assert(files.nonEmpty && files.forall(f =>
+      f.contains("/term_pfx=s/") || f.contains("/term_pfx=w/")),
+      s"engine FTS route: opened files outside term_pfx=s|w: $files")
     val p = q.queryExecution.executedPlan.toString
-    assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*term_pfx[^\\]]*\\].*"),
-      s"engine FTS route: no term_pfx partition filter:\n$p")
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(term.*"),
       s"engine FTS route: term prefix range not pushed to the scan:\n$p")
   }

@@ -650,13 +650,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // write, probe-identical through the prefix-pruned read path
     val serving = tmp("graft_ftsincr_out") + "/terms"
     Fts.compactFtsIndex(spark, idx, serving)
-    val compacted = Fts.readTermIndex(spark, serving)
+    val compacted = spark.read.parquet(serving)
     assert(compacted.columns.contains("term_pfx"), "compacted store lost the layout key")
     assert(compacted.select("id", "term")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet == want,
       "compacted serving store differs from the batch term index")
-    val probed = Fts.matchingIdsPersistent(compacted, Seq("spar", "wind"))
-      .collect().map(_.getLong(0)).toSet
+    val probed = Fts.probeIds(spark, serving, Seq("spar", "wind"))
     val direct = Fts.matchingIds(
       Fts.termIndex(docs, "doc_id", Seq("text")), Seq("spar", "wind"))
       .collect().map(_.getLong(0)).toSet

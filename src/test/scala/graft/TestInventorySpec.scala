@@ -34,7 +34,7 @@ class TestInventorySpec extends AnyFunSuite {
   private val scalaTestPins: Map[String, Int] = Map(
     "CorrectionsSpec" -> 4,
     "DeterminismSpec" -> 4,
-    "EngineSpec" -> 19,
+    "EngineSpec" -> 24,
     "GovernanceSpec" -> 16,
     "NativeExprSpec" -> 10,
     "PipelineSpec" -> 73,
