@@ -17,7 +17,6 @@ object SparkEntry {
     entries.EntryQueries,
     operators.DedupQueries,
     operators.SimilarityQueries,
-    operators.TextAnalysisQueries,
     operators.GovernanceQueries,
   )
 

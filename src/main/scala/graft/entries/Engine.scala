@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.Cols
+import graft.functions.{Cols, Text}
 import graft.operators.Fts
 
 /** The reference's user-facing search options
@@ -33,10 +33,10 @@ final case class ListPage(rows: DataFrame, total: Long, page: Int, totalPages: I
 object Engine {
 
   /** Query-side FTS tokenizer (buildFtsQuery, entries.ts:12-20):
-    * lowercase, split on whitespace, strip non-alnum per term; empty →
+    * lowercase, split on JS whitespace, strip non-alnum per term; empty →
     * no FTS filter. Deduped: FTS5 'new* AND new*' ≡ 'new*'. */
   def ftsPrefixes(q: String): Seq[String] =
-    q.toLowerCase.split("\\s+").toSeq
+    Text.JsSpaceRun.split(q.toLowerCase).toSeq
       .map(_.replaceAll("[^a-z0-9]", "")).filter(_.nonEmpty).distinct
 
   /** Sort dispatch (utils.ts:3-9, entries.ts:65-85). SQLite treats NULL

@@ -1,6 +1,7 @@
 package graft.entries
 
 import java.util.regex.Pattern
+import graft.functions.Text
 
 /** Incremental sync pipeline — SURVEY §2.9 / reference src/lib/sync.ts.
   *
@@ -46,16 +47,11 @@ object Sync {
     }
   }
 
-  /** A run of JS `\s` (WhiteSpace + LineTerminator). Java's `\s` and
-    * `String.trim` miss U+00A0 and the other Unicode spaces. */
-  private val JsSpaceRun = Pattern.compile(
-    "[\\t\\n\\u000B\\f\\r \\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]+")
-
   /** cleanText — reference src/lib/sync.ts:78-81: `replace(/\s+/g, " ")
     * .trim()` with JS's whitespace class. */
   def cleanText(value: String): String =
     if (value == null) "" else
-      JsSpaceRun.matcher(value).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
+      Text.JsSpaceRun.matcher(value).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
 
   private val CharRef = Pattern.compile(
     "&(?:#([0-9]+);?|#[xX]([0-9a-fA-F]+);?|(amp|lt|gt|quot|apos|nbsp);)")

@@ -120,9 +120,10 @@ object Cols {
       regexp_replace(lower(trim(regexp_replace(c, ":", ""))), "[^a-z0-9]+", "_"),
       "^_+|_+$", "")
 
-  /** F13 cleanText (ingest) — reference src/lib/sync.ts:78-81. */
+  /** F13 cleanText (ingest) — reference src/lib/sync.ts:78-81: collapse
+    * JS whitespace runs to one space, then trim (only ' ' is left). */
   def cleanText(c: Column): Column =
-    trim(regexp_replace(coalesce(c, lit("")), "\\s+", " "))
+    trim(regexp_replace(coalesce(c, lit("")), Text.JsSpaceRun.pattern, " "))
 
   /** F14 fmtNumber — reference src/lib/utils.ts:156-158 (round + en-US
     * thousands separators). */
@@ -163,11 +164,12 @@ object Cols {
   }
 
   /** F11 buildFtsQuery — reference src/lib/db/entries.ts:12-20: lowercase,
-    * split on whitespace, strip non-alnum per term, `term*` each, AND-join;
-    * null when no terms survive. */
+    * split on JS whitespace, strip non-alnum per term, `term*` each,
+    * AND-join; null when no terms survive. */
   def buildFtsQuery(c: Column): Column = {
     val cleaned = filter(
-      transform(split(lower(c), "\\s+"), t => regexp_replace(t, "[^a-z0-9]", "")),
+      transform(split(lower(c), Text.JsSpaceRun.pattern),
+        t => regexp_replace(t, "[^a-z0-9]", "")),
       t => t =!= "")
     when(size(cleaned) === 0, lit(null).cast(StringType))
       .otherwise(array_join(transform(cleaned, t => concat(t, lit("*"))), " AND "))

@@ -14,6 +14,14 @@ import java.util.regex.{Matcher, Pattern}
   */
 object Text {
 
+  /** A run of JS `\s` (WhiteSpace + LineTerminator): what the
+    * reference's `/\s+/` splits and collapses on. Java's `\s` and
+    * `String.trim` miss U+00A0 and the other Unicode spaces. Spark's regex
+    * functions take the same java.util.regex syntax, so the Column
+    * builders in [[Cols]] pass `JsSpaceRun.pattern` to them. */
+  val JsSpaceRun: Pattern = Pattern.compile(
+    "[\\t\\n\\u000B\\f\\r \\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]+")
+
   /** slugify — reference src/lib/utils.ts:42-49.
     * lowercase; [\s+|/] -> '-'; strip [^a-z0-9-]; collapse '-'; trim '-'. */
   def slugify(input: String): String =

@@ -1356,7 +1356,7 @@ object Dedup {
     * candidate generation, with a documented recall trade: a pair is
     * missed only if EVERY band it shares is hot — i.e. the pair
     * belongs to a mass-duplicate cluster, which is exact-dedup's (d1)
-    * or boilerplate removal's (t13) job, not near-dup's. The cap is
+    * or boilerplate removal's job, not near-dup's. The cap is
     * one unordered window count over the banded frame — no second
     * shuffle of the band keys. */
   def minhashPairsCapped(index: MinhashIndex, threshold: Double,
@@ -2701,8 +2701,8 @@ object DedupQueries extends graft.QueryModule {
     // index + band join unchanged; the source labels join back on
     // doc_id over the PAIRS frame only (O(dup pairs), never the
     // corpus), and the rollup is O(sources²) bounded. Determinism:
-    // pair keys order by least/greatest(source); mean jaccard follows
-    // the t17 rule (each ratio quantized to 1e-6 BEFORE the sum).
+    // pair keys order by least/greatest(source); mean jaccard quantizes
+    // each ratio to 1e-6 BEFORE the sum.
     graft.QueryDef("d17_cross_source_dup", Some {
       val corpus =
         """SELECT doc_id, text FROM documents
@@ -2787,8 +2787,8 @@ object DedupQueries extends graft.QueryModule {
         threshold = 0.5)
         .where(col("doc_b") >= 1000000L)),
 
-    // D8 — SUB-DOCUMENT dedup: the chunking op (t18: 50-word windows,
-    // stride 40) composed with MinHash-LSH at chunk granularity — how a
+    // D8 — SUB-DOCUMENT dedup: 50-word chunk windows (stride 40)
+    // composed with MinHash-LSH at chunk granularity — how a
     // pipeline finds boilerplate/copied PASSAGES that whole-doc
     // similarity dilutes below threshold. Chunk uid = doc_id·100000 +
     // chunk index; output restricted to the planted-probe slice and
@@ -3058,8 +3058,8 @@ object DedupQueries extends graft.QueryModule {
     // against the band-join candidate set at thresholds {0.5, 0.6,
     // 0.7, 0.8}: recall = truth pairs the bands surfaced; precision =
     // candidates that are true at θ. The corpus is a bounded slice
-    // (doc_id < 300 + the near probes), the t32 discipline: an
-    // exhaustive-truth EVAL is a sampled audit by nature — at 100 TB
+    // (doc_id < 300 + the near probes): an exhaustive-truth EVAL is
+    // a sampled audit by nature — at 100 TB
     // you run it on a slice to pick (bands, rows), then run the tuned
     // LSH on the corpus; the posting-list join is the same
     // equality-join shape as the band join itself. Counts are exact
@@ -3433,8 +3433,8 @@ object DedupQueries extends graft.QueryModule {
 
     // D33 — LEAKAGE-SAFE train/eval split: assign splits by NEAR-DUP
     // CLUSTER, never by document — a doc-level hash split leaks eval
-    // content into training through near-duplicates (the contamination
-    // t8 guards against, created at split time). Every member of a
+    // content into training through near-duplicates (contamination
+    // created at split time). Every member of a
     // cluster hashes on the CLUSTER id (Knuth, 90/10), so cross-split
     // near-dup pairs are zero BY CONSTRUCTION — and the output proves
     // it: `cross_split_pairs` re-joins the real pair graph against the

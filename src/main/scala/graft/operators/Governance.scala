@@ -80,7 +80,7 @@ object Governance {
       .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(outDir)
 
   /** Chunk stores key rows by cid = base_doc_id * 100000 + index (the
-    * t18/d8 convention) — purge resolves the BASE id. Integer division
+    * d8 convention) — purge resolves the BASE id. Integer division
     * (`div`), not float: `/` goes through Double, which is exact only
     * below 2^53 — with hash-derived 64-bit ids a retracted doc's chunks
     * could silently survive a compliance purge. */
@@ -406,8 +406,8 @@ object GovernanceQueries extends graft.QueryModule {
     // inverse CDF. m+0.5 centering keeps u strictly inside (0,1) so
     // ln never sees 0, and /2^20 is a power-of-two division (exact in
     // IEEE), so both engines feed ln the identical double; the final
-    // integer round is the t25 quantization class. Map-side after one
-    // daily rollup; O(days) output.
+    // integer round lands both engines on the same value. Map-side
+    // after one daily rollup; O(days) output.
     graft.QueryDef("g4_dp_release", Some {
       val daily =
         """SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
@@ -513,8 +513,9 @@ object GovernanceQueries extends graft.QueryModule {
 
     // G1 — takedown purge across the corpus AND its chunk store, audited
     // as before/after row counts per artifact (the compliance evidence a
-    // retraction produces). The chunk counts replay the t18 chunker's
-    // window arithmetic on both sides, so the oracle independently
+    // retraction produces). The chunk counts replay the 50-word,
+    // stride-40 chunk window arithmetic on both sides, so the oracle
+    // independently
     // derives how many chunk rows each purged doc must take with it.
     graft.QueryDef("g1_takedown_purge", Some(
       s"""WITH wrds AS (

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal binary columns — real encode/decode plumbing for the M
-  * family. At scale the payload is an opaque `binary` parquet column
+/** Multimodal binary columns — real encode/decode plumbing. No gate
+  * query or mirror page calls it; PipelineSpec's four m-cases (m2,
+  * m3/m4, m5, m8) are its only callers (ROADMAP item 1, slice (b)).
+  * At scale the payload is an opaque `binary` parquet column
   * (image/audio blobs) carried alongside typed metadata; decode /
   * feature-extract runs per-partition so each task touches only its own
   * blobs and no byte ever crosses the driver.
@@ -14,9 +16,7 @@ import org.apache.spark.sql.functions._
   * BITMAPFILEHEADER+BITMAPINFOHEADER, 24bpp, 4-byte row padding) and
   * canonical 44-byte PCM WAV — deterministically from doc_id, and the
   * decoder genuinely parses the bytes back (magic checks, little-endian
-  * field reads, length validation). The oracle recomputes the expected
-  * features in closed form from doc_id, so a header written or parsed
-  * at the wrong offset fails the gate.
+  * field reads, length validation).
   */
 object Multimodal {
 

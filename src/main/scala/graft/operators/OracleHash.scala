@@ -2,8 +2,7 @@ package graft.operators
 
 /** DuckDB SQL generators that replay the engine's integer-hash
   * arithmetic — the machinery that turns "rows-only" gate rows into
-  * full value-for-value oracle rows (the t5_winnowing precedent,
-  * generalized).
+  * full value-for-value oracle rows.
   *
   * Every engine-side hash is deterministic integer arithmetic, so each
   * has an exact DuckDB twin built from HUGEINT mod-2^64 operations:
@@ -40,8 +39,9 @@ object OracleHash {
   val MM = "CAST('18446744073709551616' AS HUGEINT)" // 2^64
 
   /** Overflow-safe Knuth multiplicative hash (id · 2654435761) mod 2^32
-    * — the engine's deterministic sampling hash (t7/t20/t22/n40
-    * family). The naive product overflows a 64-bit integer past id ~
+    * — the engine's deterministic sampling hash (d33's split, n40's
+    * sampler, n42's triplet shards). The naive product overflows a
+    * 64-bit integer past id ~
     * 3.47e9: Spark wraps silently negative (every keep-predicate
     * passes), DuckDB raises — the engines would diverge exactly at the
     * id scale a 100 TB corpus reaches. Reduce mod 2^32 first and split
@@ -55,11 +55,6 @@ object OracleHash {
   def knuth32Sql(id: String): String = knuth32(id, "//")
   def knuth32Col(id: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.expr(knuth32(id, "div"))
-  /** The mod-2^31 reduction of [[knuth32]] (2^32 is a multiple of 2^31,
-    * so reducing the 32-bit hash equals reducing the full product). */
-  def knuth31Sql(id: String): String = s"(${knuth32Sql(id)}) % 2147483648"
-  def knuth31Col(id: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(s"(${knuth32(id, "div")}) % 2147483648")
   private val B64 = BigInt(1) << 64
 
   // xxHash64 primes
@@ -129,14 +124,7 @@ object OracleHash {
   def xxh64Rel(src: String): String =
     s"SELECT tok, CAST(u % 2147483648 AS BIGINT) AS base FROM (${xxh64UnsignedRel(src)})"
 
-  /** A `(tok, h)` relation with the full SIGNED 64-bit xxhash64 value —
-    * what Spark's `xxhash64(col)` returns — for consumers that need the
-    * sign bit or the full modulus (feature hashing). */
-  def xxh64SignedRel(src: String): String =
-    s"SELECT tok, CAST(CASE WHEN u >= CAST('9223372036854775808' AS HUGEINT) " +
-      s"THEN u - $MM ELSE u END AS BIGINT) AS h FROM (${xxh64UnsignedRel(src)})"
-
-  /** The shared xxHash64 pipeline over string column `tok`, yielding the
+  /** The xxHash64 pipeline over string column `tok`, yielding the
     * unsigned value in column `u`. */
   private def xxh64UnsignedRel(src: String): String = {
     val word = (0 until 8).map(t =>

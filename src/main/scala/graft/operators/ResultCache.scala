@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * to parquet keyed by a canonical (scope, params) hash and replays them
   * until the source BOOKMARK (any change-detection string — S8's
   * max-id/count pair, a lake snapshot version) moves, at which point the
-  * entry is recomputed and atomically replaced. Driver-side work is two
+  * entry is recomputed and replaced (see [[withCache]] for what a
+  * concurrent reader can observe). Driver-side work is two
   * tiny file reads; the result itself never passes through the driver.
   */
 object ResultCache {
@@ -52,12 +53,18 @@ object ResultCache {
 
   /** Returns (result, hit): `hit` is true when a fresh materialization
     * was replayed without invoking `compute`. A stale or missing entry
-    * computes into a temp directory, renames it over the entry, then
-    * advances the bookmark — so a concurrent reader sees either the old
-    * complete artifact or the new one, never a half-written directory.
-    * (Writer-vs-writer races assume the scheduler runs one refresher per
-    * key, as the reference's cron does; a lake table format is the
-    * answer when that doesn't hold.) */
+    * computes into a temp directory, deletes the old data directory,
+    * renames the temp directory into its place, then advances the
+    * bookmark. What holds: a data directory, once present, is a complete
+    * write (never a half-written one), and the bookmark moves only after
+    * the new data is in place. What does not hold: between the delete
+    * and the rename there is NO data directory, so a concurrent reader
+    * whose bookmark still matches fails to read it, and a reader already
+    * scanning the old files can lose them mid-read. Concurrent misses on
+    * one key also share `.data.tmp`. Callers must run one refresher per
+    * key and keep readers off a key while it refreshes; ROADMAP item 7(a)
+    * holds the fix (per-writer temp directories, version-named data
+    * directories, the bookmark as a pointer). */
   def withCache(spark: SparkSession, cacheDir: String, scope: String,
                 params: Seq[(String, String)], bookmark: String)
                (compute: => DataFrame): (DataFrame, Boolean) = {

@@ -1646,10 +1646,10 @@ object Similarity {
     *     margin is strictly positive (the margin FILTER — ties teach
     *     nothing and flipped pairs would teach the wrong order).
     *  4. EXPORT — triplets sharded by Knuth hash of the query id
-    *     (t20's rule: a query's triplets co-locate for in-batch reuse),
+    *     (a query's triplets co-locate for in-batch reuse),
     *     written partitionBy(shard); the returned frame is the
-    *     per-shard MANIFEST read back from the written files (t20b's
-    *     bookkeeping: what a trainer reads to plan epochs).
+    *     per-shard MANIFEST read back from the written files (what a
+    *     trainer reads to plan epochs).
     *
     * Scale shape: the corpus-sized token frame is probed by two
     * broadcast gather-joins of the O(S·k) mined pair list and never
@@ -3545,8 +3545,8 @@ object SimilarityQueries extends graft.QueryModule {
     // forward pass, so the full two-stage pipeline is
     // oracle-replayable end to end; at 100 TB swap the surrogate for
     // the model UDF and every join stays identical. Each feature term
-    // quantizes to an exact integer BEFORE the sum (the t17 ln rule),
-    // so ranking is integer-exact.
+    // quantizes to an exact integer BEFORE the sum, so ranking is
+    // integer-exact.
     graft.QueryDef("n18_cross_rerank", Some {
       val toks = "list_filter(string_split_regex(lower(strip_accents(text)), '[^a-z0-9]+'), x -> x <> '')"
       def ts(t: String) =
@@ -3888,8 +3888,8 @@ object SimilarityQueries extends graft.QueryModule {
     // codebook is the fix). Reads the WRITTEN code table (the serving
     // artifact); occupancy is one (m, code) agg — 128 groups, map-side
     // combined — and the per-subspace totals broadcast. Entropy terms
-    // follow the t45/t48 ln rule (nano-quantized before the exact
-    // sum); p is a single IEEE division of exact counts.
+    // are nano-quantized before the exact sum; p is a single IEEE
+    // division of exact counts.
     graft.QueryDef("n29_pq_code_balance", Some(
       s"""WITH vecs AS (SELECT vec_id, embedding FROM embeddings),
          |${OracleHash.lloydCtes(8, 16, 5)},
@@ -4297,8 +4297,8 @@ object SimilarityQueries extends graft.QueryModule {
     // each vector's nearest cell and its squared error in a FIXED
     // ascending-dimension loop (bit-identical to the oracle's ordered
     // strict fold — the n6 ADC discipline), each per-(vec, subspace)
-    // error quantizes to an integer nano before aggregation (the t17
-    // rule: no double ever accumulates across rows), and the rollup is
+    // error quantizes to an integer nano before aggregation (no double
+    // ever accumulates across rows), and the rollup is
     // O(nSub) rows. Training cost is shared knowledge: at scale the
     // codebooks come from the nightly build; the report is one extra
     // map+agg over the encode pass it already runs.
@@ -4443,15 +4443,15 @@ object SimilarityQueries extends graft.QueryModule {
     // they poison cosine with NaN and IVF assignment with ties),
     // exact-DUPLICATE vectors (identical quantized coordinates: an
     // upstream encoder re-emit or collapsed batch — found via ONE
-    // count window on the joined coordinate key, the t36 group-size
-    // shape), and the quantized-norm range/mean. The QC gate a
+    // count window on the joined coordinate key), and the
+    // quantized-norm range/mean. The QC gate a
     // pipeline runs BEFORE index build, where a bad batch is one
     // filter instead of a rebuilt index. Planted probes keep every
     // check non-degenerate: a zeroed clone and an exact clone of
     // vec 0. All stats are exact ints; mean is the one fixed-shape
     // division. O(labels) output; the window key is the quantized
-    // vector itself — at 100 TB you'd key on xxhash64 of it (8 B, the
-    // t37 discipline); the raw key here keeps the oracle
+    // vector itself — at 100 TB you'd key on xxhash64 of it (8 B);
+    // the raw key here keeps the oracle
     // hash-emulation-free.
     graft.QueryDef("n20_vector_qc", Some(
       """WITH base AS (
@@ -5165,8 +5165,8 @@ object SimilarityQueries extends graft.QueryModule {
     // diversification knob): temperature-mix the sampling budget
     // across SEMANTIC clusters — the IVF fit's cells — instead of
     // metadata buckets, so a head topic that dominates the crawl
-    // cannot dominate the sample. Same exact-integer allocation
-    // discipline as t28/t34/t58 (quantized sqrt share, one integer
+    // cannot dominate the sample. Exact-integer allocation
+    // (quantized sqrt share, one integer
     // multiply-divide per target, ceil-div epochs), applied to
     // per-cell VECTOR counts; output is O(cells), the totals are two
     // 1-row broadcasts, and the only corpus-scaled work is the cell
@@ -5215,11 +5215,11 @@ object SimilarityQueries extends graft.QueryModule {
     // Each cell's target converts to an integer hash threshold over
     // the 2^32 Knuth-hash space (thresh = target·2^32 div n_vec — one
     // integer multiply-divide, no float rate anywhere), and a vector
-    // is kept iff its t20-style multiplicative hash falls below its
+    // is kept iff its Knuth multiplicative hash falls below its
     // cell's threshold — reproducible under any partitioning, no
     // rand(). Cells whose target meets or exceeds their occupancy get
     // thresh >= 2^32 and keep everything (the upsampled tail — epoch
-    // repetition is the trainer's job, per t34). Map-side hash + an
+    // repetition is the trainer's job). Map-side hash + an
     // O(cells) broadcast join; output is the sampled corpus slice a
     // shard-writer consumes.
     graft.QueryDef("n40_cluster_sample_apply", Some(
@@ -5432,7 +5432,7 @@ object SimilarityQueries extends graft.QueryModule {
     // D31 — BLOCKING-RECALL EVAL for the d29 cell blocker: d14's dial
     // at the embedding level. Ground truth is the EXHAUSTIVE exact
     // integer cosine over a bounded eval slice (vec_id < 300 + the
-    // planted probes — the t32/d14 discipline: an exhaustive-truth
+    // planted probes — the d14 discipline: an exhaustive-truth
     // eval is a sampled audit by nature), expressed as a dimension-
     // equality join (posexplode → join on i → pair rollup — a hash
     // join, never a cartesian); candidates are same-cell membership in

@@ -453,7 +453,7 @@ object StarAggs extends graft.QueryModule {
     // histogram in ONE hash agg — the price key is bounded by the VALUE
     // RANGE (integer cents), not the row count, so at 100 TB the
     // histogram stays O(distinct prices) — then a cumulative window
-    // over histogram rows only (the t29/t38 discipline) and a 3-row
+    // over histogram rows only and a 3-row
     // broadcast rank probe pick each percentile as the smallest value
     // whose cumulative count reaches ceil(p·n) (quantile_disc law,
     // ranks in integer space). The oracle derives the same values
@@ -559,8 +559,7 @@ object StarAggs extends graft.QueryModule {
 
     // A22 — GROUPED TREND REGRESSION: per-agency least-squares fit of
     // monthly order volume on a month index — the "is this segment
-    // growing or shrinking, and how noisily" primitive behind the e21
-    // forecast and t29 adaptive thresholds. One rollup shuffle to
+    // growing or shrinking, and how noisily" primitive. One rollup shuffle to
     // O(agencies × months), then per-group closed-form slope/intercept/
     // r² from EXACT BIGINT moment sums (x is an integer month index,
     // y an integer count — no ln quantization even needed; the e23

@@ -1,27 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — SURVEY §2.9.
   *
   * The reference's incremental model is a scheduled micro-batch with a
   * high-watermark (sync.ts:177-212), which maps to Trigger.AvailableNow
-  * over a file source + foreachBatch upsert. Beyond parity, the engine
-  * adds custom sessionization state via flatMapGroupsWithState, with
-  * bounded state at scale (session state is per-active-user only), and
-  * the batch_id-scoped incremental index maintainers.
+  * over a file source + foreachBatch upsert. Each maintainer here lands
+  * its micro-batch's rows in a batch_id-scoped directory, so a retried
+  * batch replaces its own output. [[eventStream]] is the streaming read
+  * of the events table, normalizing the same `ts` encodings as
+  * Tables.events.
   */
 object Streams {
-
-  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-                         event_type: String, value: Double, props: String)
-  final case class SessionOut(user_id: Long, session_start_us: Long,
-                              session_end_us: Long, n_events: Long)
-  // public: the state encoder's generated code instantiates it reflectively
-  final case class SessionState(startUs: Long, endUs: Long, n: Long)
 
   /** File-source stream of event parquet. Structured Streaming needs a
     * declared schema, but the PHYSICAL encoding of `ts` has varied across
@@ -58,87 +52,6 @@ object Streams {
       case other => throw new IllegalStateException(
         s"events.ts has unsupported physical type $other")
     }
-  }
-
-  /** 30-minute-gap sessionization with explicit state — the streaming
-    * twin of the batch e1_sessionize query. Emits a session when the gap
-    * closes it; processing-time-ordered within a micro-batch. */
-  /** Exact epoch micros of a Timestamp — getTime alone is millis and
-    * would truncate the microsecond component that the batch twin's
-    * unix_micros keeps. */
-  def tsMicros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
-  /** Sessionize with EVENT-TIME TIMEOUT eviction (round-16: the r15
-    * verdict's #3 — NoTimeout left state O(all users ever seen) on an
-    * unbounded stream). The timeout IS the session gap rule expressed
-    * in time instead of in a successor event: state times out when the
-    * watermark passes `session end + gap`, at which point ANY later
-    * event for that user would have opened a new session anyway — so
-    * the timeout emits the identical session the next event (or the
-    * gate's sentinel) would have, then removes the state. State is now
-    * O(users active within one gap of the watermark), not O(users
-    * ever). Requires a watermark on `ts` (EventTimeTimeout's
-    * contract); [[incrementalSessions]] sets one at the gap itself, so
-    * cross-user skew up to the gap never drops an event. A user whose
-    * state timed out and who then sends a late-but-not-dropped event
-    * gets a NEW session — exactly what the gap rule says
-    * (StreamingSpec pins the eviction). */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    // The watermark is applied HERE, not by the caller (round-17 advice
-    // fix): EventTimeTimeout makes an attached watermark a hard runtime
-    // requirement, and an API whose contract is "pass a Dataset[Event]
-    // you remembered to watermark" fails at stream start for anyone who
-    // didn't. Delay = the gap itself — a user up to one gap behind the
-    // global max is never dropped, while eviction still fires once the
-    // watermark passes end+gap. On a batch Dataset withWatermark is a
-    // no-op, so the sessionizer logic stays testable both ways.
-    events.withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // Watermark passed end+gap with no new event for this user:
-            // the gap rule closes the session by TIME. Timeouts fire
-            // only for keys with no data in the batch, so this can
-            // never race the merge branch below.
-            val st = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, st.startUs, st.endUs, st.n))
-          } else {
-            // Deterministic within-batch order regardless of shuffle arrival.
-            val sorted = rows.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = Seq.newBuilder[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val us = tsMicros(e.ts)
-              cur match {
-                case Some(st) if us - st.endUs <= gapUs =>
-                  cur = Some(st.copy(endUs = us, n = st.n + 1))
-                case Some(st) =>
-                  out += SessionOut(userId, st.startUs, st.endUs, st.n)
-                  cur = Some(SessionState(us, us, 1))
-                case None =>
-                  cur = Some(SessionState(us, us, 1))
-              }
-            }
-            cur.foreach { st =>
-              state.update(st)
-              // Next eviction point: gap past the session end, clamped
-              // strictly above the current watermark (Spark rejects a
-              // timeout at or before it). The clamp only DEFERS eviction
-              // for a session already behind the watermark; events keep
-              // full authority over session contents either way.
-              state.setTimeoutTimestamp(math.max(
-                (st.endUs + gapUs) / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            out.result().iterator
-          }
-      }
   }
 
   /** Incremental MinHash-LSH index maintenance — the dedup analog of the
@@ -319,41 +232,6 @@ object Streams {
     * (Fts.readIncrementalIndex), which is the trigger world's
     * DELETE+INSERT expressed as last-writer-wins — per-batch work is
     * O(batch), never a historical rewrite. */
-  /** File-source streaming sessionization, maintained incrementally —
-    * the e1b gate's engine. Each Trigger.AvailableNow run folds the
-    * newly arrived event chunks through [[sessionize]]'s per-user
-    * GroupState and APPENDS the sessions that run CLOSES to the parquet
-    * sink; the still-open tail session per user stays in the state
-    * store, carried across runs by the checkpoint. Callers that need
-    * end-of-corpus sessions flushed (the batch-equality gate) append a
-    * per-user sentinel event past the gap horizon — the flush rides the
-    * operator's own gap rule rather than a state-store back door, and
-    * the sentinel's own session (the only one still open afterwards) is
-    * excluded by its start time. State is O(active users); chunks must
-    * arrive per-user time-ordered across runs (within a run,
-    * [[sessionize]] sorts), the same contract as the batch twin's
-    * event-time window. */
-  def incrementalSessions(spark: SparkSession, sourceDir: String,
-                          sinkDir: String, checkpointDir: String,
-                          gapMinutes: Int = 30): Unit = {
-    import spark.implicits._
-    // The gap-sized watermark now lives INSIDE sessionize (its
-    // EventTimeTimeout contract is unbreakable rather than documented);
-    // under the gates' time-bisected chunk delivery the emitted
-    // sessions are provably identical to NoTimeout's (a timeout fires
-    // only for a user with no data in the batch, whose every later
-    // event is beyond the gap by then).
-    val q = sessionize(eventStream(spark, sourceDir).as[Event], gapMinutes)
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   def incrementalFtsIndex(spark: SparkSession, sourceDir: String,
                           indexDir: String, checkpointDir: String): Unit = {
     val schema = StructType(Seq(
@@ -752,38 +630,6 @@ object Streams {
       .start()
     q.awaitTermination()
   }
-
-  /** Streaming drift detection — the e3 batch z-score maintained
-    * incrementally: each micro-batch writes ITS OWN daily-count deltas
-    * to a batchId-scoped partition (overwrite — idempotent under
-    * micro-batch retry, like every incremental index here); per-batch
-    * work is O(batch events), never a historical rescan. Readers merge
-    * the partials per (type, day) with one sum and score through the
-    * SAME TextAnalysisQueries.driftZscores stage the e3 gate row uses —
-    * batch and stream cannot drift. A day whose events span batches is
-    * simply the sum of its deltas. */
-  def incrementalDailyCounts(spark: SparkSession, sourceDir: String,
-                             rollupDir: String, checkpointDir: String): Unit = {
-    val q = eventStream(spark, sourceDir).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$rollupDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Merge the incremental rollup and z-score it — the streaming read
-    * path of e3. */
-  def readDriftScores(spark: SparkSession, rollupDir: String): DataFrame =
-    graft.operators.TextAnalysisQueries.driftZscores(
-      spark.read.parquet(rollupDir)
-        .groupBy("event_type", "day").agg(sum(col("cnt")).as("cnt")))
 
   /** Incremental gram-index maintenance (the d21 substring-dedup
     * store): each micro-batch grams ONLY its own rows through the

@@ -2,8 +2,9 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 
-/** Chunk delivery for the streaming-equals-batch gates (s6b/e1b/e3b/
-  * e5b): land `df` as ONE parquet file at a STABLE path (`dir/name`).
+/** Chunk delivery for the streaming-equals-batch gates (s6b and the
+  * incremental dedup and similarity maintainers' gates): land `df` as
+  * ONE parquet file at a STABLE path (`dir/name`).
   * The file source checkpoints by path, so a re-invoked gate re-writes
   * identical bytes to an already-processed path and the stream
   * correctly no-ops — idempotent delivery without any gate-side "have

@@ -18,9 +18,7 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
     "o1_sort_dispatch", "o1_fee_sort", "o2_offset_page", "o5_topn",
     "o6_snapshot_sort", "o7_topk_agg", "q_list_entries", "s9_rss_items",
     "n1_ann_bruteforce", "n2_ann_lsh", "n4_ann_batch",
-    "s9b_rss_document", "s9c_agency_feed", "t39_dsir_resample",
-    "t46_cms_counts", "t51_vocab_coverage",
-    "t48_kl_source_drift")
+    "s9b_rss_document", "s9c_agency_feed")
 
   test("limit-bearing queries are invariant to shuffle partition count") {
     val alt = spark.newSession()
@@ -38,20 +36,17 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
 
   // No LIMIT in these, but each leans on a window / hash-bucket / batch
   // mechanism where a partitioning-sensitivity bug would hide: d20/d21
-  // islands windows, n31's rank window + integer DCG, x9's election
-  // window.
+  // islands windows, n31's rank window + integer DCG.
   private val r13Queries = Seq(
     "d20_max_dup_spans", "d21_spans_against_index", "n31_ranking_eval",
-    "x9_curation_manifest", "d22_span_attribution", "n32_scalar_quant",
-    "t55_encoding_qc", "n34_matryoshka_recall", "t56_encoding_repair",
+    "d22_span_attribution", "n32_scalar_quant", "n34_matryoshka_recall",
     "n35_matryoshka_topk",
     // d23's best-match window + blocked self-join, d24's blocked
-    // containment join, t57's per-doc bottom-k window, a22's grouped
-    // moment sums — each leans on a window/join mechanism where a
-    // partitioning-sensitivity bug would hide.
-    "d23_record_linkage", "d24_containment", "t57_mink_prob",
-    "a22_trend_regression", "d25_linkage_against_index",
-    "n36_residual_pq", "n37_ann_ivfpq_residual",
+    // containment join, a22's grouped moment sums — each leans on a
+    // window/join mechanism where a partitioning-sensitivity bug would
+    // hide.
+    "d23_record_linkage", "d24_containment", "a22_trend_regression",
+    "d25_linkage_against_index", "n36_residual_pq", "n37_ann_ivfpq_residual",
     "n37b_ann_ivfpq_residual_persistent")
 
   test("round-13 additions are invariant to shuffle partition count") {
@@ -76,9 +71,9 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
     "d11_dup_span_removal", "d20b_max_dup_spans_l30",
     // round 16: n42/n43's teacher-ranked triplet windows + shard
     // rollup (positive election must not depend on shuffle order),
-    // d33's CC-keyed split + pair audit, t61's per-doc explode.
+    // d33's CC-keyed split + pair audit.
     "n42_distill_pairs", "n43_distill_lsh",
-    "d33_leakage_safe_split", "t61_passage_chunks",
+    "d33_leakage_safe_split",
     // round 17: d34's rarest-first gram sort + prefix-bucket candidate
     // join — the distinct/verify pipeline must not depend on shuffle
     // order (the frequency counts that define the order are exact ints).

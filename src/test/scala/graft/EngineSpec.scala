@@ -112,6 +112,15 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
     assert(ids == Seq(14L) && total == 1) // 'spark window' in subject
     val (ids2, _) = run(SearchOptions(q = Some("spark"), pageSize = 50))
     assert(ids2.toSet == Set(6L, 14L)) // 'spark' appears in subjects 6 and 14
+    // The query splits on JS whitespace (buildFtsQuery's /\s+/), so
+    // U+00A0 and U+2028 separate prefixes instead of gluing them.
+    assert(Engine.ftsPrefixes("Spark\u00A0Wind\u2028 x") == Seq("spark", "wind", "x"))
+    assert(spark.range(1)
+      .select(graft.functions.Cols.buildFtsQuery(
+        org.apache.spark.sql.functions.lit("Spark\u00A0Wind\u2028x")))
+      .head().getString(0) == "spark* AND wind* AND x*")
+    val (ids3, total3) = run(SearchOptions(q = Some("Spark\u00A0Wind"), pageSize = 50))
+    assert(ids3 == Seq(14L) && total3 == 1)
   }
 
   test("FTS: overlapping prefixes ('wind window') — one term credits both") {

@@ -42,25 +42,11 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("broadcast-dependent pipeline ops never shuffle the corpus side") {
-    // t8: the eval 8-gram index must broadcast (hash join, small build
-    // side); n4: the query-vector set fans out via a broadcast join —
-    // either shape is fine as long as the corpus side has no Exchange
-    // feeding the join from a shuffle of corpus rows.
-    assert(plan("t8_contamination").contains("BroadcastHashJoin"),
-      "t8: eval gram index not broadcast")
+    // n4: the query-vector set fans out via a broadcast join, so the
+    // corpus side has no Exchange feeding the join from a shuffle of
+    // corpus rows.
     assert(plan("n4_ann_batch").contains("Broadcast"),
       "n4: query set not broadcast")
-  }
-
-  test("t19: the TF-IDF posting join broadcasts the query side") {
-    // The corpus posting list must never shuffle against the query docs:
-    // query postings (5 docs) broadcast, and per-query top-k goes through
-    // the bounded ObjectHashAggregate (TopKAggregator), not a window sort
-    // of every candidate.
-    val p = plan("t19_tfidf_similar")
-    assert(p.contains("BroadcastHashJoin"), "t19: posting join not broadcast")
-    assert(p.contains("ObjectHashAggregate"), "t19: top-k not via Aggregator")
-    assert(!p.contains("Window"), "t19: window sort crept into the top-k path")
   }
 
   test("n6: the ADC candidate pool is a bounded TakeOrdered, not a full sort") {
@@ -226,10 +212,11 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   test("pipeline windows are always partitioned (no global-sort Window)") {
     // A WindowExec with an empty partitionSpec funnels every row through
-    // one task — the classic scale-killer. t6/e1 windows must partition
-    // by their stratum key. plan.collect alone would be VACUOUS here:
-    // under AQE the executed plan is an AdaptiveSparkPlanExec leaf, so
-    // the walk must descend through adaptive wrappers and query stages.
+    // one task — the classic scale-killer. a13/s5/d23 windows must
+    // partition by their group key. plan.collect alone would be
+    // VACUOUS here: under AQE the executed plan is an
+    // AdaptiveSparkPlanExec leaf, so the walk must descend through
+    // adaptive wrappers and query stages.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def flatten(p: SparkPlan): Seq[SparkPlan] = {
@@ -250,22 +237,16 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // stops seeing it, the walker is broken, not the plans.
     assert(globalWindows("a11_window_totals").nonEmpty,
       "plan walker no longer sees known global windows — vacuous test")
-    for (name <- Seq("t6_pack_sequences", "e1_sessionize",
-        "t50_ccnet_buckets")) {
+    for (name <- Seq("a13_moving_avg", "s5_upsert_lww",
+        "d23_record_linkage")) {
       assert(globalWindows(name).isEmpty, s"$name: unpartitioned Window in plan")
     }
-    // t38's ONLY global window must sit on the key histogram (post-agg,
-    // O(distinct keys)) — the corpus-side rank window stays partitioned.
-    // One global WindowExec is the design; two would mean the corpus
-    // leaked into a single task.
-    assert(globalWindows("t38_quality_ntile_plan").length == 1,
-      "t38: histogram window count drifted")
   }
 
   test("a18/t41: histogram-rank queries keep their global window off the corpus") {
     // The only global WindowExec allowed is the histogram cumulative —
-    // one per query. The corpus-side row_number (t41) stays partitioned
-    // by key; a18 has no corpus window at all.
+    // one per query; a18 has no corpus window at all. (The t41 half of
+    // this case went with the text-analysis queries; a18 remains.)
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def flatten(p: SparkPlan): Seq[SparkPlan] = {
@@ -276,35 +257,21 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       }
       p +: (p.children ++ nested).flatMap(flatten)
     }
-    for (name <- Seq("a18_exact_percentiles", "t41_model_calibration")) {
-      val globals = flatten(SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan).collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(globals.length == 1, s"$name: global-window count drifted")
+    val globals = flatten(SparkEntry.queries("a18_exact_percentiles")(spark, sf)
+      .queryExecution.executedPlan).collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec
+        if w.partitionSpec.isEmpty => w
     }
+    assert(globals.length == 1, "a18: global-window count drifted")
   }
 
   test("d15/t38: small-side rollups broadcast back onto the corpus") {
+    // (The t38 half of this case went with the text-analysis queries.)
     // d15: the O(clusters) size rollup must broadcast; a shuffled join
     // here would re-exchange the corpus for a frame thousands of times
     // smaller.
     assert(plan("d15_soft_dedup_weights").contains("BroadcastHashJoin"),
       "d15: size rollup not broadcast")
-    // t38: per-key offsets and the 1-row total broadcast onto the
-    // corpus — any SortMergeJoin means the histogram join degraded to
-    // a corpus shuffle.
-    val p = plan("t38_quality_ntile_plan")
-    assert(p.contains("BroadcastHashJoin"), "t38: offsets join not broadcast")
-    assert(!p.contains("SortMergeJoin"), s"t38: corpus-side shuffled join:\n$p")
-  }
-
-  test("t35 rule report is map-side only: zero exchanges in the plan") {
-    // The Gopher rule suite must ride the corpus scan for free — any
-    // Exchange here means a rule accidentally aggregated or joined.
-    val p = plan("t35_gopher_rules")
-    assert(!p.contains("Exchange"), s"t35 shuffles:\n$p")
   }
 
   test("n18 feature gather never shuffles the corpus (broadcast joins only)") {
@@ -318,11 +285,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val p = plan("n18_cross_rerank")
     assert(!p.contains("SortMergeJoin LeftOuter"), s"n18 shuffled gather:\n$p")
     assert(!p.contains("ShuffledHashJoin"), s"n18 shuffled hash join:\n$p")
-  }
-
-  test("t36 data card has no join: dup groups via a window on the hash key") {
-    val p = plan("t36_data_card")
-    assert(!p.contains("Join"), s"t36 contains a join:\n$p")
   }
 
   test("LSH candidate joins are equality joins on band keys, not loops") {
@@ -408,11 +370,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("r12 batch: tiny stat frames broadcast; rollups never sort raw streams") {
-    // t45: the rank window partitions by lang over the VOCAB frame and
-    // the regression is a hash agg — no global (unpartitioned) sort.
-    val t45 = plan("t45_zipf_slope")
-    assert(!t45.matches("(?s).*Sort \\[c[^\\n]*DESC[^\\n]*\\], true,.*"),
-      "t45: global sort of the vocab frame (expected lang-partitioned window)")
     // n23: the energy normalizer is a 1-row broadcast, never a shuffle.
     assert(plan("n23_dim_stats").contains("BroadcastNestedLoopJoin") ||
       plan("n23_dim_stats").contains("BroadcastHashJoin"),
@@ -420,35 +377,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("r12 batch 4: cube / power-user / compaction / CMS shapes") {
-    // x5: the 1-row total joins via broadcast (never an exchange), and
-    // the inventory window is the only single-partition stage.
-    val x5 = plan("x5_compaction_plan")
-    assert(x5.contains("BroadcastNestedLoopJoin") || x5.contains("BroadcastExchange"),
-      "x5: total-size frame not broadcast")
-    assert(x5.contains("Window"), "x5: inventory cumsum window missing")
-    // t46: the top-12 probe is TakeOrderedAndProject (bounded heap, no
-    // global sort) and the 4x1024 sketch broadcasts to the probe join.
-    val t46 = plan("t46_cms_counts")
-    assert(t46.contains("TakeOrderedAndProject"),
-      "t46: heavy-token probe sorts globally")
-    assert(t46.contains("BroadcastHashJoin"), "t46: sketch not broadcast")
-    // t47: the per-source share window runs over the (source, lang)
-    // PAIR frame (post-agg), and the rollup is a hash agg — the raw
-    // corpus never enters a window or a sort.
-    val t47 = plan("t47_source_lang_entropy")
-    assert(t47.contains("Window") && t47.contains("HashAggregate"),
-      "t47: expected pair-frame window + hash rollup")
-    // t48: the top-100 vocab probe is a bounded TakeOrderedAndProject
-    // and fans out to the (source × V) grid via broadcast — the corpus
-    // token frame never re-shuffles against the grid.
-    val t48 = plan("t48_kl_source_drift")
-    assert(t48.contains("TakeOrderedAndProject"), "t48: vocab sorts globally")
-    assert(t48.contains("BroadcastNestedLoopJoin") ||
-      t48.contains("BroadcastHashJoin"), "t48: vocab grid not broadcast")
-    // x6: the diff is a genuine full-outer join of the two digest
-    // frames (added AND removed rows must both survive).
-    assert(plan("x6_snapshot_diff").contains("FullOuter"),
-      "x6: diff join is not full-outer")
     // n26: the occupancy total is a 1-row broadcast over the stored
     // artifact read.
     assert(plan("n26_ivf_rebalance_plan").contains("Broadcast"),
@@ -457,22 +385,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // (cell, dim)-agg of the assigned frame — never the reverse.
     val n27 = plan("n27_centroid_drift")
     assert(n27.contains("BroadcastHashJoin"), "n27: centroids not broadcast")
-    // x7: the fixed 20-bin grid and the per-source totals both ride
-    // broadcasts; the only joins over document-scale data are the two
-    // snapshot count-aggs.
-    assert(plan("x7_release_drift").contains("BroadcastHashJoin"),
-      "x7: grid/totals not broadcast")
-    // t50: the tier ranking must ride the histogram discipline — the
-    // offsets broadcast onto the corpus-side frame. (The 1-row token
-    // total still single-partitions, as in t17 — the window-partitioning
-    // invariant is pinned in the global-window walker test below.)
-    assert(plan("t50_ccnet_buckets").contains("BroadcastHashJoin"),
-      "t50: histogram offsets not broadcast")
-    // t51: the top-100 vocab probe stays a bounded TakeOrdered and its
-    // membership join broadcasts onto the (lang, tok) rollup.
-    val t51 = plan("t51_vocab_coverage")
-    assert(t51.contains("TakeOrderedAndProject") && t51.contains("Broadcast"),
-      "t51: vocab probe not bounded/broadcast")
     // a20: the mode election windows over the grouped rollup, and the
     // per-status totals broadcast back — the fact table never windows.
     val a20 = plan("a20_group_mode")
@@ -482,10 +394,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // at all.
     val g4 = plan("g4_dp_release")
     assert(!g4.contains("Join"), "g4: unexpected join in noised release")
-    // t52: the O(clusters) size rollup broadcasts back onto the corpus
-    // frame (the d15 discipline).
-    assert(plan("t52_effective_tokens").contains("BroadcastHashJoin"),
-      "t52: cluster sizes not broadcast")
     // n29: occupancy off the written code table, per-subspace totals
     // broadcast.
     assert(plan("n29_pq_code_balance").contains("BroadcastHashJoin"),
@@ -519,19 +427,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     ix31.unpersist()
     assert(n31.contains("Broadcast") && !n31.contains("SortMergeJoin"),
       s"n31: expected broadcast-only joins:\n$n31")
-    // x9: the 1-row funnel frame broadcasts back onto the per-shard
-    // manifest; the dedup election window is keyed (partitioned).
-    val x9 = plan("x9_curation_manifest")
-    assert(x9.contains("Broadcast"), s"x9: funnel counts not broadcast:\n$x9")
-    // t55: single-scan agg chain — counters are regexp length deltas,
-    // no join anywhere, no window.
-    val t55 = plan("t55_encoding_qc")
-    assert(!t55.contains("Join") && !t55.contains("Window"),
-      s"t55: expected join-free single-scan agg:\n$t55")
-    // t56: same join-free single-scan shape as its QC sibling.
-    val t56 = plan("t56_encoding_repair")
-    assert(!t56.contains("Join") && !t56.contains("Window"),
-      s"t56: expected join-free single-scan agg:\n$t56")
     // n32: the O(dims) stats frame broadcasts back onto the exploded
     // fact side — never a sort-merge exchange of the corpus.
     val n32 = plan("n32_scalar_quant")
@@ -560,13 +455,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert("(?s).*Window \\[[^\\]]*\\], \\[doc_a[^\\]]*\\].*".r
       .findFirstIn(d23).isDefined,
       s"d23: best-match window not partitioned by doc_a:\n$d23")
-    // t57: the LM total is a 1-row broadcast; the per-doc bottom-k
-    // window partitions by doc_id (doc-length-bounded, never global).
-    val t57 = plan("t57_mink_prob")
-    assert(t57.contains("Broadcast"), s"t57: LM total not broadcast:\n$t57")
-    assert("(?s).*Window \\[[^\\]]*\\], \\[doc_id[^\\]]*\\].*".r
-      .findFirstIn(t57).isDefined,
-      s"t57: bottom-k window not partitioned by doc_id:\n$t57")
     // a22: one rollup + one group agg — join-free by construction.
     val a22 = plan("a22_trend_regression")
     assert(!a22.contains("Join"),
@@ -678,18 +566,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val dist = cut.select(countDistinct("s")).head().getLong(0)
     assert(dist == 1000L, s"cut collapsed distinct values: $dist")
     spark.catalog.clearCache()
-  }
-
-  test("passage chunking compiles to a shuffle-free single-pass plan") {
-    // t61 is tokenize -> explode(window starts) -> slice+hash: pure
-    // map-side work whose output partitioning must follow the scan. Any
-    // Exchange in this plan means an accidental shuffle of a frame that
-    // is embarrassingly parallel at 100 TB.
-    val p = plan("t61_passage_chunks")
-    assert(!p.contains("Exchange"), "t61 plan shuffles:\n" + p)
-    // executedPlan.toString renders whole-stage codegen spans as "*(n)"
-    // operator prefixes, not the node name.
-    assert(p.contains("*(1)"), "t61 fell out of whole-stage codegen:\n" + p)
   }
 
   test("distillation gather: corpus token frame probed by broadcast, never shuffled") {

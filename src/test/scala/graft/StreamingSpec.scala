@@ -5,165 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Streams
 
-/** Structured Streaming behavior: the stateful sessionizer must match
-  * the batch window-function sessionization, and every incremental
-  * rollup or index maintainer must converge to its batch twin. */
+/** Structured Streaming behavior: every incremental index maintainer
+  * must converge to its batch twin. */
 class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def tmp(name: String): String = {
     val d = Files.createTempDirectory(name)
     d.toFile.deleteOnExit()
     d.toString
-  }
-
-  private lazy val srcDir: String = {
-    val d = tmp("graft_stream_src")
-    Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$d/events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    d
-  }
-
-  test("mapGroupsWithState sessionizer matches batch sessionization counts") {
-    import spark.implicits._
-    val events = Tables.events(spark, sf)
-      .as[Streams.Event]
-    // run the stateful function in batch mode via groupByKey on a static
-    // Dataset — flatMapGroupsWithState isn't allowed on batch, so feed it
-    // through the same logic applied per group directly:
-    val sessionsFromLogic = events.collect()
-      .groupBy(_.user_id)
-      .map { case (uid, evs) =>
-        val sorted = evs.sortBy(e => (e.ts.getTime, e.event_id)).toSeq
-        var n = 1
-        sorted.sliding(2).foreach { pair =>
-          if (pair.size == 2 &&
-            (pair(1).ts.getTime - pair(0).ts.getTime) * 1000L > 30L * 60 * 1000000)
-            n += 1
-        }
-        uid -> n
-      }
-    val batchSessions = SparkEntry.queries("e1_sessionize")(spark, sf)
-      .groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    sessionsFromLogic.foreach { case (uid, n) =>
-      assert(batchSessions(uid) == n.toLong, s"user $uid: $n vs ${batchSessions(uid)}")
-    }
-  }
-
-  test("flatMapGroupsWithState emits exactly the closed sessions in-stream") {
-    import spark.implicits._
-    val out = "sessions_stream"
-    val q = Streams.sessionize(
-      Streams.eventStream(spark, srcDir).as[Streams.Event])
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft_sess_ckpt"))
-      .format("memory").queryName(out)
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    val emitted = spark.table(out)
-      .select("user_id", "session_start_us", "session_end_us", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    // Expected: every batch session except each user's final one (still
-    // open in state when the single AvailableNow data batch ends) — PLUS
-    // the final sessions whose event-time timeout fires in the
-    // post-data batch: after the data batch the watermark advances to
-    // (max event time − 30 min), and a state whose timeout stamp
-    // ((end+gap)/1000+1 ms, the exact value sessionize sets) is behind
-    // that watermark is evicted and its session emitted.
-    val gapUs = 30L * 60L * 1000000L
-    val batch = SparkEntry.queries("e1_sessionize")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getLong(4), r.getLong(2)))
-    val lastPerUser = batch.groupBy(_._1).map { case (u, rs) => u -> rs.map(_._2).max }
-    val closed = batch
-      .filter(r => lastPerUser(r._1) != r._2)
-      .map(r => (r._1, r._3, r._4, r._5)).toSet
-    val wmMs = batch.map(_._4).max / 1000L - 30L * 60L * 1000L
-    val timedOut = batch
-      .filter(r => lastPerUser(r._1) == r._2)
-      .filter(r => (r._4 + gapUs) / 1000L + 1L < wmMs)
-      .map(r => (r._1, r._3, r._4, r._5)).toSet
-    val expected = closed ++ timedOut
-    assert(emitted == expected,
-      s"missing: ${expected -- emitted}; spurious: ${emitted -- expected}")
-  }
-
-  test("event-time timeout evicts session state; a later event opens a NEW session") {
-    // Two users: user 1's burst ends early; user 2's lone event 10 days
-    // later advances the watermark far past user 1's end+gap. Run 1 must
-    // therefore EMIT user 1's session via timeout — no sentinel, no
-    // successor event — proving the state was evicted, not parked. A
-    // second delivery then sends user 1 a fresh (non-late) event: it
-    // must open a NEW 1-event session, not resume the evicted one.
-    val root = tmp("graft_sess_evict")
-    val src = s"$root/src"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    val t0 = 1000000000000000L // fixed epoch micros
-    val day = 86400L * 1000000L
-    def ev(id: Long, us: Long, user: Long) =
-      (id, us, user, "view", 0.0, "")
-    import spark.implicits._
-    def chunk(rows: Seq[(Long, Long, Long, String, Double, String)]) =
-      rows.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
-        .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-    graft.util.Chunks.add(
-      chunk(Seq(ev(1, t0, 1), ev(2, t0 + 600L * 1000000L, 1),
-        ev(3, t0 + 10L * day, 2))), src, "c1.parquet")
-    Streams.incrementalSessions(spark, src, sink, ckpt)
-    val after1 = spark.read.parquet(sink)
-      .select("user_id", "session_start_us", "session_end_us", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(after1 == Set((1L, t0, t0 + 600L * 1000000L, 2L)),
-      s"timeout must emit user 1's session (and only it): $after1")
-    // User 1 returns 1 minute after user 2's event — ahead of the
-    // watermark (10 days − 30 min), so NOT dropped as late; far beyond
-    // the gap, so a new session either way. User 2's event then closes
-    // user 1's new session in a third delivery via the sentinel rule.
-    graft.util.Chunks.add(
-      chunk(Seq(ev(4, t0 + 10L * day + 60L * 1000000L, 1))), src, "c2.parquet")
-    Streams.incrementalSessions(spark, src, sink, ckpt)
-    graft.util.Chunks.add(
-      chunk(Seq(ev(5, t0 + 20L * day, 1), ev(6, t0 + 20L * day, 2))),
-      src, "c3.parquet")
-    Streams.incrementalSessions(spark, src, sink, ckpt)
-    val sessionsU1 = spark.read.parquet(sink)
-      .where(col("user_id") === 1L && col("session_start_us") < t0 + 15L * day)
-      .select("session_start_us", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(sessionsU1 == Set((t0, 2L), (t0 + 10L * day + 60L * 1000000L, 1L)),
-      s"late-arriving user must get a NEW session after eviction: $sessionsU1")
-  }
-
-  test("incremental daily rollup z-scores equal the batch e3 drift path") {
-    // two chunks split mid-stream: the split day's count spans batches,
-    // so the reader MUST merge per-(type, day) deltas to agree with the
-    // batch path.
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    val cut = raw.agg(max(col("event_id"))).head().getLong(0) / 2
-    val src = tmp("graft_drift_src")
-    val rollup = tmp("graft_drift_roll") + "/rollup"
-    val ckpt = tmp("graft_drift_ckpt")
-    def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft_drift_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    addChunk(raw.where(col("event_id") <= cut), "chunk1.parquet")
-    Streams.incrementalDailyCounts(spark, src, rollup, ckpt)
-    addChunk(raw.where(col("event_id") > cut), "chunk2.parquet")
-    Streams.incrementalDailyCounts(spark, src, rollup, ckpt)
-    val streamed = Streams.readDriftScores(spark, rollup)
-      .collect().map(_.toString).sorted.toSeq
-    val batch = graft.operators.TextAnalysisQueries.driftZscores(
-      Tables.events(spark, sf)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt")))
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed == batch, "incremental drift scores != batch e3 path")
   }
 
   test("index compaction: incremental batches collapse to the direct serving index") {

@@ -37,13 +37,13 @@ class TestInventorySpec extends AnyFunSuite {
     "EngineSpec" -> 24,
     "GovernanceSpec" -> 16,
     "NativeExprSpec" -> 10,
-    "PipelineSpec" -> 73,
-    "PlanSpec" -> 44,
+    "PipelineSpec" -> 56,
+    "PlanSpec" -> 40,
     "RebalanceSpec" -> 4,
     "ResultCacheSpec" -> 2,
     "ScaleOpsSpec" -> 7,
     "SchemaEvolutionSpec" -> 5,
-    "StreamingSpec" -> 23,
+    "StreamingSpec" -> 19,
     "SyncSpec" -> 17,
     "TextSpec" -> 11)
 
@@ -106,29 +106,23 @@ class TestInventorySpec extends AnyFunSuite {
     "d5_embed_cosine_dedup", "d5b_cosine_probes", "d5c_vector_redelivery",
     "d5d_vector_lww_read", "d6_dedup_clusters", "d6b_clusters_fast",
     "d7_dedup_apply", "d8_chunk_dedup", "d9_semantic_dedup_apply",
-    "dq1_quality_checks", "dq2_profile", "e10_concurrency_curve",
-    "e1_sessionize", "e1b_sessionize_stream", "e24_session_duration_pctl",
-    "e2_incremental_watermark", "e3_drift_zscore", "e3b_drift_stream",
-    "f10_requestor", "f11_fts_query", "f12_normalize_key", "f13_cleantext",
-    "f14_fmt_number", "f15_time_ago", "f16_feed_date", "f17_escape_xml",
-    "f18_page_numbers", "f19_date_windows", "f1_slugify", "f20_datediff",
-    "f2_titlify", "f3_normalize_agency", "f3_real_alias",
-    "f4_normalize_token", "f5_resolution_bucket", "f6_diffdays",
-    "f7_diffhuman", "f8_format_date", "f9_fee_parse", "g10_vector_incr_purge",
-    "g1_takedown_purge", "g2_takedown_fts_purge", "g3_tombstone_reingest",
-    "g4_dp_release", "g5_ttl_expiry_plan", "g6_gram_purge_serve",
-    "g7_prefix_purge", "g8_minhash_incr_purge", "g9_simhash_incr_purge",
-    "j1_semi_join", "j2_alias_broadcast", "j3_fullouter_aggs",
-    "j4_date_spine", "j5_corrections_join", "j5_real_corrections",
-    "j6_salted_join", "j7_asof_join", "j8_range_join", "j9_bloom_semijoin",
-    "m1_multimodal_meta", "m2_multimodal_binary", "m3_image_resize",
-    "m4_audio_frames", "m5_image_neardup", "m6_audio_neardup",
-    "m7_media_card", "m8_video_keyframes", "m9_media_dedup_clusters",
-    "n10_mean_pool", "n11_hard_negatives", "n12_ann_filtered",
-    "n13_margin_mining", "n14_ivf_cell_stats", "n15_ann_recall_eval",
-    "n16_knn_graph", "n17_mutual_knn_clusters", "n18_cross_rerank",
-    "n19_knn_label_propagation", "n1_ann_bruteforce", "n20_vector_qc",
-    "n21_pq_distortion", "n22_recall_curve", "n23_dim_stats",
+    "dq1_quality_checks", "dq2_profile", "f10_requestor", "f11_fts_query",
+    "f12_normalize_key", "f13_cleantext", "f14_fmt_number", "f15_time_ago",
+    "f16_feed_date", "f17_escape_xml", "f18_page_numbers", "f19_date_windows",
+    "f1_slugify", "f20_datediff", "f2_titlify", "f3_normalize_agency",
+    "f3_real_alias", "f4_normalize_token", "f5_resolution_bucket",
+    "f6_diffdays", "f7_diffhuman", "f8_format_date", "f9_fee_parse",
+    "g10_vector_incr_purge", "g1_takedown_purge", "g2_takedown_fts_purge",
+    "g3_tombstone_reingest", "g4_dp_release", "g5_ttl_expiry_plan",
+    "g6_gram_purge_serve", "g7_prefix_purge", "g8_minhash_incr_purge",
+    "g9_simhash_incr_purge", "j1_semi_join", "j2_alias_broadcast",
+    "j3_fullouter_aggs", "j4_date_spine", "j5_corrections_join",
+    "j5_real_corrections", "j6_salted_join", "j7_asof_join", "j8_range_join",
+    "j9_bloom_semijoin", "n10_mean_pool", "n11_hard_negatives",
+    "n12_ann_filtered", "n13_margin_mining", "n14_ivf_cell_stats",
+    "n15_ann_recall_eval", "n16_knn_graph", "n17_mutual_knn_clusters",
+    "n18_cross_rerank", "n19_knn_label_propagation", "n1_ann_bruteforce",
+    "n20_vector_qc", "n21_pq_distortion", "n22_recall_curve", "n23_dim_stats",
     "n24_pagerank_centrality", "n25_top_principal_component",
     "n26_ivf_rebalance_plan", "n27_centroid_drift", "n29_pq_code_balance",
     "n2_ann_lsh", "n2b_ann_lsh_probes", "n30_assignment_margin",
@@ -156,30 +150,8 @@ class TestInventorySpec extends AnyFunSuite {
     "s2b_parse_quarantine", "s3_normalize_date", "s4_scan_project",
     "s5_upsert_lww", "s6_fts_index", "s6b_fts_incremental",
     "s7_export_manifest", "s7b_sqlite_dump", "s8_change_detect",
-    "s9_rss_items", "s9b_rss_document", "s9c_agency_feed", "t10_pii_scan",
-    "t11_repetition", "t12_redact_pii", "t13_boilerplate", "t14_source_cap",
-    "t15_curation_funnel", "t16_token_budget_mix", "t17_unigram_logprob",
-    "t18_chunking", "t19_tfidf_similar", "t1_langid", "t20_shuffle_shard",
-    "t20b_shard_manifest", "t21_heavy_hitters", "t22_weighted_sample",
-    "t23_reservoir_per_lang", "t24_bigram_logprob", "t25_quality_model",
-    "t26_concat_split", "t27_feature_hashing", "t28_temperature_mix",
-    "t29_adaptive_quality_threshold", "t2_quality_score", "t30_bpe_train",
-    "t31_bpe_segment", "t32_dsir_weights", "t33_tokenizer_fertility",
-    "t34_mixture_plan", "t35_gopher_rules", "t36_data_card",
-    "t37_ngram_dup_report", "t38_quality_ntile_plan", "t39_dsir_resample",
-    "t3_token_count", "t40_disposition_ledger", "t41_model_calibration",
-    "t44_langid_confusion", "t45_zipf_slope", "t46_cms_counts",
-    "t47_source_lang_entropy", "t48_kl_source_drift", "t4_fingerprint",
-    "t50_ccnet_buckets", "t51_vocab_coverage", "t52_effective_tokens",
-    "t53_dup_mass_profile", "t54_packing_report", "t55_encoding_qc",
-    "t56_encoding_repair", "t57_mink_prob", "t58_quality_mixture",
-    "t59_anneal_mixture", "t5_winnowing", "t61_passage_chunks",
-    "t6_pack_sequences", "t7_stratified_sample", "t8_contamination",
-    "t8b_decontaminate", "u1_dedup_union", "u2_anti_except", "u3_intersect",
-    "x1_jsonl_export", "x2_range_shard", "x3_jsonl_roundtrip",
-    "x4_release_manifest", "x5_compaction_plan", "x6_snapshot_diff",
-    "x7_release_drift", "x8_shard_skew", "x9_curation_manifest",
-    "zo1_zorder_key")
+    "s9_rss_items", "s9b_rss_document", "s9c_agency_feed", "u1_dedup_union",
+    "u2_anti_except", "u3_intersect", "zo1_zorder_key")
 
   test("the registered gate-query set matches its pin") {
     val names = SparkEntry.allDefs.map(_.name).sorted
