@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One verifiable operator: a Spark pipeline plus (when SQL-expressible)
   * the equivalent ANSI SQL for the DuckDB oracle. Names follow the
@@ -15,27 +13,4 @@ final case class QueryDef(
 
 trait QueryModule {
   def defs: Seq[QueryDef]
-}
-
-/** Numeric-determinism helpers.
-  *
-  * The correctness gate hash-compares Spark output against DuckDB running
-  * the oracle SQL. Floating-point sums are order-dependent, so every sum
-  * over a double column is computed in exact DECIMAL arithmetic (inputs
-  * cast to DECIMAL early, identical in both engines) and only the final
-  * result is cast back to DOUBLE — bit-identical across engines and across
-  * partitionings, which also makes results stable under AQE/repartition
-  * at cluster scale.
-  */
-object Num {
-  /** Exact sum of a double column: cast to decimal(18,2) per row, sum,
-    * cast the total back to double. */
-  def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
-
-  /** Exact sum with higher scale for products (e.g. price * (1-disc)). */
-  def dsum4(c: Column): Column = sum(c.cast(DecimalType(22, 4))).cast(DoubleType)
-
-  /** decimal(18,2) view of a double column (exact row-level rounding,
-    * identical in Spark and DuckDB). */
-  def d2(c: Column): Column = c.cast(DecimalType(18, 2))
 }

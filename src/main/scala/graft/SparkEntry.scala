@@ -9,10 +9,6 @@ import graft.entries.{Engine, Fixture, SearchOptions}
   */
 object SparkEntry {
   private def modules: Seq[QueryModule] = Seq(
-    operators.StarPredicates,
-    operators.StarAggs,
-    operators.StarSorts,
-    operators.FnQueries,
     operators.FtsQueries,
     entries.EntryQueries,
     operators.DedupQueries,

@@ -30,11 +30,7 @@ object Tables {
     spark.read.schema(sch).parquet(path)
   }
 
-  def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame   = table(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = table(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")

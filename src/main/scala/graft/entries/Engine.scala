@@ -340,7 +340,7 @@ object AgencyEngine {
                    page: Int, pageSize: Int): DataFrame = {
     Engine.requirePageSize(pageSize)
     var df = stats
-    search.map(_.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty))
+    search.map(q => Text.JsSpaceRun.split(q.toLowerCase).toSeq.filter(_.nonEmpty))
       .filter(_.nonEmpty).foreach { terms =>
         val hay = lower(concat_ws(" ", col("name"), col("slug")))
         df = df.where(terms.map(t => hay.contains(t)).reduce(_ && _))

@@ -177,6 +177,67 @@ object EntryQueries extends graft.QueryModule {
       .select("id")
   }
 
+  // ---- scalar-function fixtures --------------------------------------
+  // Each is ONE Scala value rendered both into the Spark DataFrame and
+  // into the oracle's VALUES clause, so the engines see byte-identical
+  // inputs: nulls, junk fees, typo'd names and all.
+
+  private def df1(s: SparkSession, rows: Seq[(Long, Option[String])], col2: String): DataFrame = {
+    import s.implicits._
+    rows.toDF("id", col2)
+  }
+  private def sql1(rows: Seq[(Long, Option[String])], col2: String): String =
+    SqlLit.values(rows.map(r => Seq[Any](r._1, r._2)), "t", Seq("id", col2))
+
+  /** F3 fixtures: typo-fix paths (Departmint/Tcity), alias-map hits,
+    * Mc-names, WV token, whitespace collapse — corrections.ts:44-57. */
+  private val agencyVariants: Seq[(Long, Option[String])] = Seq(
+    1L -> Some("Departmint of Health"),
+    2L -> Some("Tcity of Charleston"),
+    3L -> Some("  wv  state   police "),
+    4L -> Some("McDowell County Sheriff's Office"),
+    5L -> Some("DEPARTMENT OF TRANSPORTATION"),
+    6L -> Some("Departmen of Education"),
+    7L -> Some(""),
+    8L -> None)
+
+  /** F6 fixtures; completions after [[Fixture.AsOfYear]] are "future". */
+  private val datePairs: Seq[(Long, Option[String], Option[String])] = Seq(
+    (1L, Some("2024-01-01"), Some("2024-01-31")),
+    (2L, Some("2024-01-31"), Some("2024-01-01")), // negative diff survives (JS floor)
+    (3L, Some("2024-01-01"), Some("2026-01-01")), // future-year -> -1
+    (4L, None, Some("2024-01-01")),
+    (5L, Some("2024-01-01"), None),
+    (6L, Some("garbage"), Some("2024-01-01")),
+    (7L, Some("2024-02-28"), Some("2024-03-01")),
+    (8L, Some("2020-06-15"), Some("2024-06-14")))
+
+  private val fees: Seq[(Long, Option[String])] = Seq(
+    1L -> Some("$1,250.00"),
+    2L -> Some("0"),
+    3L -> Some(""),
+    4L -> Some("25 (waived)"),
+    5L -> Some("-$13.50"),
+    6L -> None,
+    7L -> Some("fee pending"),
+    8L -> Some("100.5"))
+
+  private val rawTexts: Seq[(Long, Option[String])] = Seq(
+    1L -> Some("  hello   world  "),
+    2L -> Some("a\tb\nc"),
+    3L -> Some("<a href=\"x\">R&D 'quote'</a>"),
+    4L -> Some(""),
+    5L -> None)
+
+  private val resolutions: Seq[(Long, Option[String])] = Seq(
+    1L -> Some("Granted"),
+    2L -> Some(" granted in part "),
+    3L -> Some("EXEMPTED"),
+    4L -> Some("Rejected"),
+    5L -> Some(""),
+    6L -> None,
+    7L -> Some("No Responsive Documents"))
+
   def defs: Seq[graft.QueryDef] = Seq(
 
     // P9 — normalizeEntry over the corpus. The oracle replays the date
@@ -764,6 +825,59 @@ object EntryQueries extends graft.QueryModule {
         .select(col("id"),
           coalesce(col("req_fix"), col("request_date")).as("request_date"),
           coalesce(col("comp_fix"), col("completion_date")).as("completion_date"))
-    }
+    },
+
+    // F3 — normalizeAgencyName (UDF over typo-fix regexes + alias map,
+    // reference src/lib/corrections.ts:44-57). Fixed inputs → VALUES
+    // golden: typo fixes (Departmint→Department, Tcity→City; 'Departmen'
+    // has no trailing t so the regex leaves it), WV token and Mc-name
+    // preservation, whitespace collapse, '' and NULL pass-throughs.
+    graft.QueryDef("f3_normalize_agency", Some(
+      """SELECT * FROM (VALUES
+        |  (CAST(1 AS BIGINT), 'Department of Health'),
+        |  (CAST(2 AS BIGINT), 'City of Charleston'),
+        |  (CAST(3 AS BIGINT), 'WV State Police'),
+        |  (CAST(4 AS BIGINT), 'McDowell County Sheriff''s Office'),
+        |  (CAST(5 AS BIGINT), 'Department of Transportation'),
+        |  (CAST(6 AS BIGINT), 'Departmen of Education'),
+        |  (CAST(7 AS BIGINT), ''),
+        |  (CAST(8 AS BIGINT), CAST(NULL AS VARCHAR))
+        |) AS t(id, canonical)""".stripMargin))((s, d) =>
+      df1(s, agencyVariants, "raw").select(col("id"),
+        Normalize.agencyNameUdf(col("raw")).as("canonical"))),
+
+    // F5 — resolutionBucketKey 5-way normalization.
+    graft.QueryDef("f5_resolution_bucket", Some(
+      s"""SELECT id, ${bucketSqlOf("resolution")} AS bucket
+         |FROM ${sql1(resolutions, "resolution")}""".stripMargin))((s, d) =>
+      df1(s, resolutions, "resolution")
+        .select(col("id"), Cols.resolutionBucket(col("resolution")).as("bucket"))),
+
+    // F6 — diffDays with the -1 null/unparseable/future-year rules.
+    graft.QueryDef("f6_diffdays", Some(
+      s"""SELECT id, CAST(CASE
+         |  WHEN f IS NULL OR t IS NULL OR try_cast(f AS DATE) IS NULL OR try_cast(t AS DATE) IS NULL THEN -1
+         |  WHEN EXTRACT(year FROM try_cast(t AS DATE)) > $AsOfYear THEN -1
+         |  ELSE date_diff('day', try_cast(f AS DATE), try_cast(t AS DATE)) END AS INTEGER) AS days
+         |FROM ${SqlLit.values(datePairs.map(p => Seq[Any](p._1, p._2, p._3)), "t", Seq("id", "f", "t"))}""".stripMargin))((s, d) => {
+      import s.implicits._
+      datePairs.toDF("id", "f", "t")
+        .select(col("id"), Cols.diffDays(col("f"), col("t"), AsOfYear).as("days"))
+    }),
+
+    // F9 — the SQLite CAST-prefix fee parse behind the highest_fee sort.
+    graft.QueryDef("f9_fee_parse", Some(
+      s"""SELECT id, $feeIntSql AS fee_int_sqlite
+         |FROM ${sql1(fees, "fee")}""".stripMargin))((s, d) =>
+      df1(s, fees, "fee").select(col("id"),
+        Cols.sqliteFeeInt(col("fee")).as("fee_int_sqlite"))),
+
+    // F17 — escapeXml 5-entity chain (& first).
+    graft.QueryDef("f17_escape_xml", Some(
+      s"""SELECT id, replace(replace(replace(replace(replace(coalesce(raw_text, ''),
+         |  '&', '&amp;'), '<', '&lt;'), '>', '&gt;'), '"', '&quot;'), '''', '&apos;') AS escaped
+         |FROM ${sql1(rawTexts, "raw_text")}""".stripMargin))((s, d) =>
+      df1(s, rawTexts, "raw_text").select(col("id"),
+        Cols.escapeXml(coalesce(col("raw_text"), lit(""))).as("escaped")))
   )
 }

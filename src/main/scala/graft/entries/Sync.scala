@@ -50,8 +50,7 @@ object Sync {
   /** cleanText — reference src/lib/sync.ts:78-81: `replace(/\s+/g, " ")
     * .trim()` with JS's whitespace class. */
   def cleanText(value: String): String =
-    if (value == null) "" else
-      Text.JsSpaceRun.matcher(value).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
+    if (value == null) "" else Text.collapseJsSpace(value)
 
   private val CharRef = Pattern.compile(
     "&(?:#([0-9]+);?|#[xX]([0-9a-fA-F]+);?|(amp|lt|gt|quot|apos|nbsp);)")

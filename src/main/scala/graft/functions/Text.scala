@@ -7,26 +7,34 @@ import java.util.regex.{Matcher, Pattern}
   * Semantics follow /root/reference/src/lib/utils.ts and
   * /root/reference/src/lib/corrections.ts exactly (JS regex behavior
   * re-expressed with java.util.regex; \w and \b are ASCII in both).
-  * These back the tiny UDF surface (titlify / normalizeAgencyName /
-  * buildPageNumbers) and the native strip_diacritics expression;
-  * everything else in the engine is pure Column expressions so Catalyst
-  * codegen and pushdown stay intact.
+  * These back the agency identity UDFs in `Normalize`, the sync parser
+  * and the native strip_diacritics expression; everything else in the
+  * engine is pure Column expressions so Catalyst codegen and pushdown
+  * stay intact.
   */
 object Text {
 
-  /** A run of JS `\s` (WhiteSpace + LineTerminator): what the
-    * reference's `/\s+/` splits and collapses on. Java's `\s` and
-    * `String.trim` miss U+00A0 and the other Unicode spaces. Spark's regex
-    * functions take the same java.util.regex syntax, so the Column
-    * builders in [[Cols]] pass `JsSpaceRun.pattern` to them. */
-  val JsSpaceRun: Pattern = Pattern.compile(
-    "[\\t\\n\\u000B\\f\\r \\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]+")
+  /** The members of JS `\s` (WhiteSpace + LineTerminator), as the body
+    * of a java.util.regex character class. Java's `\s` and `String.trim`
+    * miss U+00A0 and the other Unicode spaces. */
+  private val JsSpace =
+    "\\t\\n\\u000B\\f\\r \\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF"
+
+  /** A run of JS `\s`: what the reference's `/\s+/` splits and collapses
+    * on. */
+  val JsSpaceRun: Pattern = Pattern.compile(s"[$JsSpace]+")
+
+  /** `value.replace(/\s+/g, " ").trim()` with JS's whitespace class: after
+    * the collapse each end holds at most one space. */
+  def collapseJsSpace(value: String): String =
+    JsSpaceRun.matcher(value).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
+
+  private val SlugSeparator = Pattern.compile(s"[$JsSpace+|/]")
 
   /** slugify — reference src/lib/utils.ts:42-49.
     * lowercase; [\s+|/] -> '-'; strip [^a-z0-9-]; collapse '-'; trim '-'. */
   def slugify(input: String): String =
-    input.toLowerCase
-      .replaceAll("[\\s+|/]", "-")
+    SlugSeparator.matcher(input.toLowerCase).replaceAll("-")
       .replaceAll("[^a-z0-9-]", "")
       .replaceAll("-+", "-")
       .replaceAll("^-|-$", "")
@@ -103,7 +111,7 @@ object Text {
     canonicalAgencyMatch(agency, aliasGroups) match {
       case Some(canonical) => canonical
       case None =>
-        val spaced = agency.replaceAll("\\s+", " ").trim
+        val spaced = collapseJsSpace(agency)
         val preserved = scala.collection.mutable.Map.empty[String, String]
         val mc = McToken.matcher(spaced)
         while (mc.find()) preserved(mc.group.toLowerCase) = mc.group

@@ -258,6 +258,10 @@ object Governance {
 /** Registered governance queries (G-family extension). */
 object GovernanceQueries extends graft.QueryModule {
 
+  /** g5's fixed "current" year for the orders table: the same constant
+    * in Spark and in the oracle, never the wall clock. */
+  private val AsOfYear = 2001
+
   private lazy val g2Root: String = graft.util.TmpRoot("g2-fts")
   private val g2Written =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -360,7 +364,7 @@ object GovernanceQueries extends graft.QueryModule {
 
     // G5 — TTL EXPIRY PLAN: the retention-policy dry run — per order
     // year, row volume, whether the year falls outside the 6-year
-    // retention window (fixed asOf = Star.AsOf, never current_date),
+    // retention window (fixed asOf = AsOfYear, never current_date),
     // and the cumulative share of the table reclaimed by expiring
     // ascending years — the report a data-retention review signs off
     // BEFORE any delete runs. One year-grain rollup (map-side
@@ -373,13 +377,13 @@ object GovernanceQueries extends graft.QueryModule {
          |    CAST(count(*) AS BIGINT) AS n_rows
          |  FROM orders GROUP BY 1),
          |tot AS (SELECT CAST(SUM(n_rows) AS BIGINT) AS total FROM y)
-         |SELECT yr, n_rows, yr < ${Star.AsOfYear - 6} AS expires,
+         |SELECT yr, n_rows, yr < ${AsOfYear - 6} AS expires,
          |  CAST(n_rows AS DOUBLE) / total AS share,
-         |  CAST(SUM(CASE WHEN yr < ${Star.AsOfYear - 6} THEN n_rows
+         |  CAST(SUM(CASE WHEN yr < ${AsOfYear - 6} THEN n_rows
          |    ELSE 0 END) OVER (ORDER BY yr) AS DOUBLE) / total
          |    AS cum_expired_share
          |FROM y, tot""".stripMargin))((s, d) => {
-      val cutoff = Star.AsOfYear - 6
+      val cutoff = AsOfYear - 6
       val y = Tables.orders(s, d)
         .groupBy(year(col("o_orderdate")).cast(LongType).as("yr"))
         .agg(count(lit(1)).as("n_rows"))

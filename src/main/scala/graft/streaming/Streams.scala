@@ -69,8 +69,8 @@ object Streams {
     * Cost shape: candidate generation scales with batch size × occupancy
     * of the touched bands (after pruning), not corpus size; the
     * verification joins hash-shuffle the index's signature frame — at
-    * real scale store the index bucketed by doc_id (ScaleOps
-    * writeBucketed) to make those joins shuffle-free. Pairs found by
+    * real scale store the index bucketed by doc_id (`bucketBy` on write)
+    * to make those joins shuffle-free. Pairs found by
     * earlier batches cannot re-emit: a candidate requires one side from
     * the current batch.
     *

@@ -15,8 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DeterminismSpec extends AnyFunSuite with SparkSuite {
 
   private val limitQueries = Seq(
-    "o1_sort_dispatch", "o1_fee_sort", "o2_offset_page", "o5_topn",
-    "o6_snapshot_sort", "o7_topk_agg", "q_list_entries", "s9_rss_items",
+    "q_list_entries", "s9_rss_items",
     "n1_ann_bruteforce", "n2_ann_lsh", "n4_ann_batch",
     "s9b_rss_document", "s9c_agency_feed")
 
@@ -42,10 +41,9 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
     "d22_span_attribution", "n32_scalar_quant", "n34_matryoshka_recall",
     "n35_matryoshka_topk",
     // d23's best-match window + blocked self-join, d24's blocked
-    // containment join, a22's grouped moment sums — each leans on a
-    // window/join mechanism where a partitioning-sensitivity bug would
-    // hide.
-    "d23_record_linkage", "d24_containment", "a22_trend_regression",
+    // containment join — each leans on a window/join mechanism where a
+    // partitioning-sensitivity bug would hide.
+    "d23_record_linkage", "d24_containment",
     "d25_linkage_against_index", "n36_residual_pq", "n37_ann_ivfpq_residual",
     "n37b_ann_ivfpq_residual_persistent")
 

@@ -408,36 +408,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("m5: aHash sets exactly the bright half's bits and shrugs off brightness shifts") {
-    // hand-built 16x8 24bpp BMP: left half dark (10), right half bright
-    // (200) — expected hash has bit (py*8+px) set iff px >= 4.
-    def bmp(shift: Int): Array[Byte] = {
-      val (w, h) = (16, 8)
-      val rowSize = ((w * 3 + 3) / 4) * 4
-      val b = java.nio.ByteBuffer.allocate(54 + rowSize * h)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      b.put('B'.toByte).put('M'.toByte)
-      b.putInt(54 + rowSize * h); b.putInt(0); b.putInt(54)
-      b.putInt(40); b.putInt(w); b.putInt(h)
-      b.putShort(1); b.putShort(24); b.putInt(0); b.putInt(rowSize * h)
-      b.putInt(2835); b.putInt(2835); b.putInt(0); b.putInt(0)
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
-        b.put(54 + y * rowSize + x * 3 + c,
-          ((if (x < 8) 10 else 200) + shift).toByte)
-      b.array()
-    }
-    val expected = (0 until 64).filter(i => i % 8 >= 4)
-      .foldLeft(0L)((acc, i) => acc | (1L << i))
-    val h0 = operators.Multimodal.aHashBmp(0L, bmp(0))
-    assert(h0 == expected, f"aHash $h0%016x != expected $expected%016x")
-    // uniform brightness shift: gray and mean move together — hash fixed
-    assert(operators.Multimodal.aHashBmp(0L, bmp(20)) == h0)
-    // corrupt payload rejected, not mis-hashed
-    intercept[IllegalArgumentException] {
-      operators.Multimodal.aHashBmp(0L, Array[Byte](1, 2, 3))
-    }
-  }
-
   test("n9: MMR demotes the redundant near-clone that relevance-only keeps") {
     import spark.implicits._
     def v(xs: (Int, Double)*): Seq[Float] = {
@@ -535,69 +505,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     spark.catalog.clearCache()
   }
 
-  test("m2: media decode round-trips real BMP/WAV headers and rejects corrupt bytes") {
-    import graft.operators.Multimodal
-    // doc 4 → BMP: width 20, height 12, rows padded to 4 bytes
-    val bmp = Multimodal.decode(4L, Multimodal.encode(4L))
-    assert(bmp == Multimodal.MediaFeatures(4L, "bmp", 54 + 60 * 12, 20, 12, 0, 0, 0))
-    // doc 7 → WAV: 2 ch (7/2=3 odd), 8700 Hz, 107 samples → 12 ms
-    val wav = Multimodal.decode(7L, Multimodal.encode(7L))
-    assert(wav == Multimodal.MediaFeatures(7L, "wav", 44 + 107 * 2 * 2, 0, 0, 8700, 2, 12))
-    // a truncated payload must fail loudly, not ship fake features
-    intercept[Exception] { Multimodal.decode(4L, Multimodal.encode(4L).take(20)) }
-    // a corrupted declared length must fail the validation read
-    val broken = Multimodal.encode(4L); broken(2) = (broken(2) + 1).toByte
-    intercept[Exception] { Multimodal.decode(4L, broken) }
-  }
-
-  test("m3/m4: resize re-encodes a decodable BMP; frame stride covers the stream") {
-    import graft.operators.Multimodal
-    // The resized blob is a REAL BMP: decode() must accept it and read
-    // back the thumbnail geometry (so header offsets + row padding are
-    // right), and identity-resize must preserve every pixel byte.
-    val (blob, feat) = Multimodal.resizeBmp(4L, Multimodal.encode(4L))
-    assert(feat.out_len == blob.length.toLong && feat.out_w == 8 && feat.out_h == 8)
-    val rt = Multimodal.decode(4L, blob)
-    assert(rt.width == 8 && rt.height == 8 && rt.media_type == "bmp")
-    // identity resize (same dims as source: doc 4 → 20×12) is lossless
-    val src = Multimodal.encode(4L)
-    val (same, _) = Multimodal.resizeBmp(4L, src, outW = 20, outH = 12)
-    assert(same.toSeq == src.toSeq)
-    // WAV frame sampling: doc 7 → 107 samples → ceil(107/160) = 1 frame;
-    // doc 401 → 501 % 400 = 101... use doc 345: 100+345%400=445 → 3 frames
-    val f7 = Multimodal.frameSampleWav(7L, Multimodal.encode(7L))
-    assert(f7.n_samples == 107 && f7.n_frames == 1)
-    val f345 = Multimodal.frameSampleWav(345L, Multimodal.encode(345L))
-    assert(f345.n_samples == 445 && f345.n_frames == 3)
-    // not-a-BMP / not-a-WAV must fail loudly
-    intercept[Exception] { Multimodal.resizeBmp(7L, Multimodal.encode(7L)) }
-    intercept[Exception] { Multimodal.frameSampleWav(4L, Multimodal.encode(4L)) }
-  }
-
-  test("m8: Y4M sampler counts frames from markers and rejects corrupt streams") {
-    import graft.operators.Multimodal
-    // doc 10: W=18 H=6 → 3+10%6=7 frames, stride 2 samples frames 0,2,4,6
-    val v10 = Multimodal.frameSampleY4m(10L, Multimodal.encodeY4m(10L))
-    assert(v10.width == 18 && v10.height == 6 &&
-      v10.n_frames == 7 && v10.n_sampled == 4)
-    // closed-form luma: frame f's Y plane is bytes [f·3p, f·3p + p)
-    val p = 18 * 6
-    val expected = (0 until 7 by 2).map(f =>
-      (0 until p).map(i => (10L * 23 + (f * 3 * p + i).toLong * 11) & 0xFF).sum).sum
-    assert(v10.luma_sum == expected)
-    // a flipped byte inside a FRAME marker must fail loudly
-    val corrupt = Multimodal.encodeY4m(10L)
-    val hdr = corrupt.indexOf('\n'.toByte) + 1
-    corrupt(hdr) = 'X'.toByte
-    intercept[Exception] { Multimodal.frameSampleY4m(10L, corrupt) }
-    // truncated stream (trailing bytes check) must fail loudly
-    intercept[Exception] {
-      Multimodal.frameSampleY4m(10L, Multimodal.encodeY4m(10L).dropRight(1))
-    }
-    // a WAV payload is not a Y4M
-    intercept[Exception] { Multimodal.frameSampleY4m(7L, Multimodal.encode(7L)) }
-  }
-
   test("fts: prefix search folds diacritics (unicode61 remove_diacritics)") {
     import spark.implicits._
     val docs = Seq(
@@ -620,73 +527,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(hits == Set(1L))
   }
 
-  test("t21: Misra-Gries guarantees hold in the decrement regime, any partitioning") {
-    import spark.implicits._
-    // Zipf-ish synthetic stream: token i appears i*i times, i = 1..40;
-    // k=8 counters vs 40 distinct keys forces constant decrements.
-    val k = 8
-    val toks = (1 to 40).flatMap(i => Seq.fill(i * i)(s"tok$i"))
-    val n = toks.size.toLong
-    val truth = toks.groupBy(identity).map { case (t, xs) => t -> xs.size.toLong }
-    for (parts <- Seq(3, 13)) {
-      val ds = spark.createDataset(toks).repartition(parts)
-      val mg = ds.select(new functions.MisraGriesAggregator(k).toColumn).head()
-      assert(mg.size <= k, s"summary exceeds k: ${mg.size}")
-      for ((t, est) <- mg) {
-        assert(est <= truth(t), s"$t overcounted: $est > ${truth(t)}")
-        assert(truth(t) - est <= n / (k + 1.0), s"$t undercount bound broken")
-      }
-      for ((t, c) <- truth if c > n / (k + 1.0))
-        assert(mg.contains(t), s"guaranteed-heavy $t missing at parts=$parts")
-    }
-  }
-
-  test("a12: approx_percentile (the 100 TB drop-in) tracks the exact percentiles") {
-    // The registered a12 uses exact interpolated percentiles (oracle-able);
-    // at real scale the mergeable-sketch approx_percentile replaces it.
-    // Pin the swap's error bound so the claim isn't hand-waving.
-    val vals = Tables.lineitem(spark, sf)
-      .select(col("l_quantity").cast("double").as("v"))
-      .where(col("v").isNotNull)
-    val exact = vals.agg(
-      percentile(col("v"), lit(0.5)), percentile(col("v"), lit(0.9)))
-      .head()
-    val approx = vals.agg(
-      percentile_approx(col("v"), lit(0.5), lit(10000)),
-      percentile_approx(col("v"), lit(0.9), lit(10000)))
-      .head()
-    for (i <- 0 until 2) {
-      val e = exact.getDouble(i)
-      val a = approx.getDouble(i)
-      assert(math.abs(e - a) <= 1.0 + e * 0.01,
-        s"p${if (i == 0) 50 else 90}: approx $a vs exact $e")
-    }
-  }
-
-  test("a6: approx_count_distinct (the 100 TB drop-in) tracks the exact distinct") {
-    // The registered a6 uses exact GROUP BY distinct (oracle-able); at
-    // real scale the mergeable HLL++ sketch replaces COUNT(DISTINCT) in
-    // one pass without the expand+double-shuffle. Pin the swap's error
-    // bound so the claim isn't hand-waving.
-    val keys = Tables.orders(spark, sf).select(col("o_custkey"))
-    val exact = keys.distinct().count().toDouble
-    val approx = keys.agg(approx_count_distinct(col("o_custkey"), rsd = 0.02))
-      .head().getLong(0).toDouble
-    assert(math.abs(approx - exact) <= exact * 0.06,
-      s"approx $approx vs exact $exact")
-  }
-
-  test("o7: TopKAggregator agrees with the window top-k on real data") {
-    val rows = SparkEntry.queries("o7_topk_agg")(spark, sf).collect()
-    assert(rows.length > 0)
-    val byGroup = rows.groupBy(_.getString(0))
-    byGroup.foreach { case (_, rs) =>
-      assert(rs.length <= 3)
-      val scores = rs.map(_.getDouble(2)).toSeq
-      assert(scores == scores.sorted.reverse, "group rows must be score-desc")
-    }
-  }
-
   test("n18: rerank scores exactly the n7 pool and orders by the quantized score") {
     val pool = SparkEntry.queries("n7_hybrid_rrf")(spark, sf)
       .collect().map(_.getLong(0)).toSet
@@ -697,17 +537,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     // inside the query; equal scores may interleave only by id).
     val scores = rer.map(_.getAs[Double]("rerank_score"))
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
-  }
-
-  test("upsert LWW is idempotent across re-runs (S5 determinism)") {
-    val q = SparkEntry.queries("s5_upsert_lww")
-    val a = q(spark, sf).collect().map(_.toString).sorted.toSeq
-    val b = q(spark, sf).collect().map(_.toString).sorted.toSeq
-    assert(a == b)
-    // every key appears exactly once after the merge
-    val keys = q(spark, sf).groupBy("o_orderkey").count()
-      .where(col("count") > 1).count()
-    assert(keys == 0)
   }
 
   test("timeline densification: |rows| == days+1 and totals preserved (J4/A8)") {
@@ -773,21 +602,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     // singletons carry their own id — no doc silently absorbed
     val clustered = rows.filter { case (id, cl) => cl != id }
     assert(clustered.nonEmpty)
-  }
-
-  test("a18: histogram percentiles equal the local order statistics") {
-    val rows = SparkEntry.queries("a18_exact_percentiles")(spark, sf)
-      .collect().map(r => r.getDouble(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
-    val cents = Tables.lineitem(spark, sf)
-      .select(round(col("l_extendedprice") * 100).cast("long").as("c"))
-      .collect().map(_.getLong(0)).sorted
-    val n = cents.length
-    for (p <- Seq(0.5, 0.9, 0.99)) {
-      val rank = math.ceil(p * n).toLong
-      assert(rows(p)._1 == rank, s"p=$p rank")
-      assert(rows(p)._2 == cents(rank.toInt - 1), s"p=$p value")
-    }
   }
 
   test("n22: recall curve is monotone in the probe budget") {

@@ -19,28 +19,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("filters reach the parquet scan (PushedFilters non-empty)") {
-    for (name <- Seq("p2_in_list", "p5_nonnull_nonempty", "p7_point_lookup")) {
-      val p = plan(name)
-      assert(p.contains("PushedFilters: ["), s"$name: no pushdown section")
-      assert(!p.matches("(?s).*PushedFilters: \\[\\].*"),
-        s"$name: PushedFilters is empty")
-    }
-  }
-
-  test("column pruning: scan-project reads only requested columns") {
-    val p = plan("s4_scan_project")
-    assert(p.contains("ReadSchema"))
-    // o_comment is the widest orders column; a pruned scan must not read it
-    assert(!p.contains("o_comment"), "scan reads unprojected o_comment")
-  }
-
-  test("small-side joins broadcast (corrections overlay, alias expansion)") {
-    for (name <- Seq("j2_alias_broadcast", "j5_corrections_join")) {
-      assert(plan(name).contains("BroadcastHashJoin"), s"$name: no broadcast join")
-    }
-  }
-
   test("broadcast-dependent pipeline ops never shuffle the corpus side") {
     // n4: the query-vector set fans out via a broadcast join, so the
     // corpus side has no Exchange feeding the join from a shuffle of
@@ -168,11 +146,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"d10: bucket probe not pruning partitions:\n$p")
   }
 
-  test("CASE-overlay variant stays join-free (constant-folded expression)") {
-    val p = plan("p4_case_overlay")
-    assert(!p.contains("Join"), "p4 should be a pure expression, no join")
-  }
-
   test("flagship + hot aggregates run under whole-stage codegen") {
     // whole-stage codegen shows as a `*(n)` stage prefix in the tree
     // string; under AQE the codegen'd final plan only exists after an
@@ -205,18 +178,14 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       SearchOptions(sort = "newest", pageSize = 5), Some("2025-05-01"), 2L)
     val pc = cur.queryExecution.executedPlan.toString
     assert(pc.contains("TakeOrderedAndProject") && !pc.contains("Window"))
-    // the registered OFFSET gate query shares the shape
-    val o2 = plan("o2_offset_page")
-    assert(o2.contains("TakeOrderedAndProject") && !o2.contains("Window"))
   }
 
   test("pipeline windows are always partitioned (no global-sort Window)") {
     // A WindowExec with an empty partitionSpec funnels every row through
-    // one task — the classic scale-killer. a13/s5/d23 windows must
-    // partition by their group key. plan.collect alone would be
-    // VACUOUS here: under AQE the executed plan is an
-    // AdaptiveSparkPlanExec leaf, so the walk must descend through
-    // adaptive wrappers and query stages.
+    // one task — the classic scale-killer. d23's window must partition
+    // by its group key. plan.collect alone would be VACUOUS here: under
+    // AQE the executed plan is an AdaptiveSparkPlanExec leaf, so the
+    // walk must descend through adaptive wrappers and query stages.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def flatten(p: SparkPlan): Seq[SparkPlan] = {
@@ -227,42 +196,21 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       }
       p +: (p.children ++ nested).flatMap(flatten)
     }
-    def globalWindows(name: String) = flatten(
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec
-        if w.partitionSpec.isEmpty => w
-    }
-    // Positive control: a11's window IS unpartitioned (by design — it
-    // runs post-aggregation over O(distinct keys) rows). If the walker
-    // stops seeing it, the walker is broken, not the plans.
-    assert(globalWindows("a11_window_totals").nonEmpty,
+    def globalWindows(df: org.apache.spark.sql.DataFrame) =
+      flatten(df.queryExecution.executedPlan).collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec
+          if w.partitionSpec.isEmpty => w
+      }
+    // Positive control: an unpartitioned window, built here. If the
+    // walker stops seeing it, the walker is broken, not the plans.
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, sum}
+    val control = spark.range(10)
+      .withColumn("run", sum(col("id")).over(Window.orderBy(col("id"))))
+    assert(globalWindows(control).nonEmpty,
       "plan walker no longer sees known global windows — vacuous test")
-    for (name <- Seq("a13_moving_avg", "s5_upsert_lww",
-        "d23_record_linkage")) {
-      assert(globalWindows(name).isEmpty, s"$name: unpartitioned Window in plan")
-    }
-  }
-
-  test("a18/t41: histogram-rank queries keep their global window off the corpus") {
-    // The only global WindowExec allowed is the histogram cumulative —
-    // one per query; a18 has no corpus window at all. (The t41 half of
-    // this case went with the text-analysis queries; a18 remains.)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val nested = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => Nil
-      }
-      p +: (p.children ++ nested).flatMap(flatten)
-    }
-    val globals = flatten(SparkEntry.queries("a18_exact_percentiles")(spark, sf)
-      .queryExecution.executedPlan).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec
-        if w.partitionSpec.isEmpty => w
-    }
-    assert(globals.length == 1, "a18: global-window count drifted")
+    assert(globalWindows(SparkEntry.queries("d23_record_linkage")(spark, sf)).isEmpty,
+      "d23_record_linkage: unpartitioned Window in plan")
   }
 
   test("d15/t38: small-side rollups broadcast back onto the corpus") {
@@ -385,11 +333,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // (cell, dim)-agg of the assigned frame — never the reverse.
     val n27 = plan("n27_centroid_drift")
     assert(n27.contains("BroadcastHashJoin"), "n27: centroids not broadcast")
-    // a20: the mode election windows over the grouped rollup, and the
-    // per-status totals broadcast back — the fact table never windows.
-    val a20 = plan("a20_group_mode")
-    assert(a20.contains("Window") && a20.contains("BroadcastHashJoin"),
-      "a20: election/totals shape drifted")
     // g4: noised release is agg + map-side hash arithmetic — no joins
     // at all.
     val g4 = plan("g4_dp_release")
@@ -455,10 +398,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert("(?s).*Window \\[[^\\]]*\\], \\[doc_a[^\\]]*\\].*".r
       .findFirstIn(d23).isDefined,
       s"d23: best-match window not partitioned by doc_a:\n$d23")
-    // a22: one rollup + one group agg — join-free by construction.
-    val a22 = plan("a22_trend_regression")
-    assert(!a22.contains("Join"),
-      s"a22: expected join-free double aggregation:\n$a22")
   }
 
   test("d21: the gram-index probe prunes bucket partitions at the file index") {

@@ -101,55 +101,6 @@ object PropertySpec extends Properties("graft.scalars") {
       (d1 & d2).nonEmpty
     }
 
-  property("Misra-Gries guarantees hold for any stream, k, and merge split") =
-    Prop.forAll(
-      Gen.listOf(Gen.frequency(
-        5 -> Gen.const("hot"),
-        3 -> Gen.oneOf("a", "b", "c", "d", "e"),
-        2 -> Gen.alphaLowerChar.map(_.toString))),
-      Gen.choose(2, 12), Gen.choose(1, 8)) { (toks, k, nSplits) =>
-      val agg = new graft.functions.MisraGriesAggregator(k)
-      val chunks = toks.grouped(math.max(1, toks.size / nSplits max 1)).toList
-      val partials = chunks.map(_.foldLeft(agg.zero)(agg.reduce))
-      val merged = agg.finish(partials.foldLeft(agg.zero)(agg.merge))
-      val truth = toks.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val bound = toks.size.toDouble / (k + 1)
-      merged.size <= k &&
-        merged.forall { case (t, est) =>
-          est <= truth(t) && truth(t) - est <= bound } &&
-        truth.forall { case (t, c) => c <= bound || merged.contains(t) }
-    }
-
-  property("quantile sketch: mass exact, values real, rank bound for any stream/k/split") =
-    Prop.forAll(
-      Gen.nonEmptyListOf(Gen.chooseNum(-1000.0, 1000.0)),
-      Gen.choose(2, 24), Gen.choose(1, 8)) { (xs, k, nSplits) =>
-      import graft.functions.QuantileSketch
-      val agg = new graft.functions.QuantileSketchAggregator(k)
-      val chunks = xs.grouped(math.max(1, xs.size / nSplits max 1)).toList
-      val partials = chunks.map(_.foldLeft(agg.zero)(agg.reduce))
-      val sk = agg.finish(partials.foldLeft(agg.zero)(agg.merge))
-      val n = xs.size.toLong
-      val sortedXs = xs.sorted
-      val maxLevel = sk.length - 1
-      // observed-structure bound (tighter than the a17 analytic one);
-      // the contract is INTERVAL containment — v is within bound of
-      // being a correct q-quantile — which stays meaningful under
-      // arbitrary ties, where rank distance does not (a tie block
-      // spanning the target makes both strict ranks far from it even
-      // when v is exactly right)
-      val bound = maxLevel.toLong * n / (2L * k) + 1L
-      QuantileSketch.mass(sk) == n &&
-        sk.flatten.forall(xs.contains) &&
-        Seq(0.05, 0.25, 0.5, 0.75, 0.95).forall { q =>
-          val v = QuantileSketch.quantile(sk, q)
-          val target = math.max(1L, math.ceil(q * n).toLong)
-          val lt = sortedXs.count(_ < v).toLong
-          val le = sortedXs.count(_ <= v).toLong
-          lt <= target + bound && le >= target - bound
-        }
-    }
-
   // Mirrors OracleHash.knuth32's integer-division/modulo formula in
   // Scala longs (Spark's `div`/`%` and DuckDB's `//`/`%` agree with
   // Scala's `/`/`%` on non-negative operands, which the formula keeps

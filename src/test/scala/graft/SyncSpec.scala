@@ -142,11 +142,6 @@ class SyncSpec extends AnyFunSuite with SparkSuite {
     assert(refs.subject.contains("café ménu"))
     assert(refs.details.contains("<b> \"x\" 'y'"))
     assert(Sync.cleanText("\u00A0 a\u2003\u00A0b \uFEFF") == "a b")
-    // The F13 Column form follows the same JS whitespace class.
-    assert(spark.range(1)
-      .select(graft.functions.Cols.cleanText(
-        org.apache.spark.sql.functions.lit("\u00A0 a\u2003\u00A0b \uFEFF")))
-      .head().getString(0) == "a b")
   }
 
   test("parseEntry: 404-shaped page has no fields -> None") {

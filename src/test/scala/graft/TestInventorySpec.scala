@@ -37,17 +37,16 @@ class TestInventorySpec extends AnyFunSuite {
     "EngineSpec" -> 24,
     "GovernanceSpec" -> 16,
     "NativeExprSpec" -> 10,
-    "PipelineSpec" -> 56,
-    "PlanSpec" -> 40,
+    "PipelineSpec" -> 46,
+    "PlanSpec" -> 35,
     "RebalanceSpec" -> 4,
     "ResultCacheSpec" -> 2,
-    "ScaleOpsSpec" -> 7,
     "SchemaEvolutionSpec" -> 5,
     "StreamingSpec" -> 19,
     "SyncSpec" -> 17,
     "TextSpec" -> 11)
 
-  private val propertyPin = 18 // PropertySpec (ScalaCheck Properties)
+  private val propertyPin = 16 // PropertySpec (ScalaCheck Properties)
 
   private def specFiles: Seq[String] = {
     val dir = new java.io.File("src/test/scala/graft")
@@ -82,19 +81,13 @@ class TestInventorySpec extends AnyFunSuite {
 
   /** Sorted names of every registered gate query. */
   private val gateQueryPin: Seq[String] = Seq(
-    "a10_avg_from_parts", "a11_window_totals", "a12_response_percentiles",
-    "a13_moving_avg", "a14_rollup", "a15_approx_percentiles",
-    "a16_approx_distinct", "a17_quantile_sketch", "a18_exact_percentiles",
-    "a1_filtered_count", "a20_group_mode", "a22_trend_regression",
-    "a2_agency_stats", "a3_slug_reagg", "a4_groupcounts", "a5_group_counts",
-    "a6_distinct", "a7_max_min_coalesce", "a8_timeline_bucket",
-    "a8b_warehouse_timeline", "a9_home_stats", "d10_index_dedup",
-    "d11_dup_span_removal", "d12_split_leakage", "d13_capped_lsh",
-    "d14_lsh_recall_eval", "d15_soft_dedup_weights", "d16_neardup_clusters",
-    "d17_cross_source_dup", "d18_lsh_band_sweep", "d19_survivorship",
-    "d1_exact_dedup", "d20_max_dup_spans", "d20b_max_dup_spans_l30",
-    "d21_spans_against_index", "d22_span_attribution", "d23_record_linkage",
-    "d24_containment", "d25_linkage_against_index", "d26_linkage_block_audit",
+    "a8b_warehouse_timeline", "d10_index_dedup", "d11_dup_span_removal",
+    "d12_split_leakage", "d13_capped_lsh", "d14_lsh_recall_eval",
+    "d15_soft_dedup_weights", "d16_neardup_clusters", "d17_cross_source_dup",
+    "d18_lsh_band_sweep", "d19_survivorship", "d1_exact_dedup",
+    "d20_max_dup_spans", "d20b_max_dup_spans_l30", "d21_spans_against_index",
+    "d22_span_attribution", "d23_record_linkage", "d24_containment",
+    "d25_linkage_against_index", "d26_linkage_block_audit",
     "d27_capped_linkage", "d28_dup_flow_matrix", "d28b_dup_flow_share",
     "d29_ann_blocked_dedup", "d29b_multiprobe_dedup", "d2_minhash_lsh",
     "d2b_minhash_probes", "d2c_minhash_redelivery", "d2d_minhash_lww_read",
@@ -106,19 +99,13 @@ class TestInventorySpec extends AnyFunSuite {
     "d5_embed_cosine_dedup", "d5b_cosine_probes", "d5c_vector_redelivery",
     "d5d_vector_lww_read", "d6_dedup_clusters", "d6b_clusters_fast",
     "d7_dedup_apply", "d8_chunk_dedup", "d9_semantic_dedup_apply",
-    "dq1_quality_checks", "dq2_profile", "f10_requestor", "f11_fts_query",
-    "f12_normalize_key", "f13_cleantext", "f14_fmt_number", "f15_time_ago",
-    "f16_feed_date", "f17_escape_xml", "f18_page_numbers", "f19_date_windows",
-    "f1_slugify", "f20_datediff", "f2_titlify", "f3_normalize_agency",
-    "f3_real_alias", "f4_normalize_token", "f5_resolution_bucket",
-    "f6_diffdays", "f7_diffhuman", "f8_format_date", "f9_fee_parse",
-    "g10_vector_incr_purge", "g1_takedown_purge", "g2_takedown_fts_purge",
-    "g3_tombstone_reingest", "g4_dp_release", "g5_ttl_expiry_plan",
-    "g6_gram_purge_serve", "g7_prefix_purge", "g8_minhash_incr_purge",
-    "g9_simhash_incr_purge", "j1_semi_join", "j2_alias_broadcast",
-    "j3_fullouter_aggs", "j4_date_spine", "j5_corrections_join",
-    "j5_real_corrections", "j6_salted_join", "j7_asof_join", "j8_range_join",
-    "j9_bloom_semijoin", "n10_mean_pool", "n11_hard_negatives",
+    "dq1_quality_checks", "dq2_profile", "f17_escape_xml",
+    "f3_normalize_agency", "f3_real_alias", "f5_resolution_bucket",
+    "f6_diffdays", "f9_fee_parse", "g10_vector_incr_purge",
+    "g1_takedown_purge", "g2_takedown_fts_purge", "g3_tombstone_reingest",
+    "g4_dp_release", "g5_ttl_expiry_plan", "g6_gram_purge_serve",
+    "g7_prefix_purge", "g8_minhash_incr_purge", "g9_simhash_incr_purge",
+    "j5_real_corrections", "n10_mean_pool", "n11_hard_negatives",
     "n12_ann_filtered", "n13_margin_mining", "n14_ivf_cell_stats",
     "n15_ann_recall_eval", "n16_knn_graph", "n17_mutual_knn_clusters",
     "n18_cross_rerank", "n19_knn_label_propagation", "n1_ann_bruteforce",
@@ -135,23 +122,16 @@ class TestInventorySpec extends AnyFunSuite {
     "n44_ivf_rebalance_apply", "n4_ann_batch", "n4b_ann_ivf_batch",
     "n5_group_centroids", "n6_ann_pq", "n6b_ann_pq_probes",
     "n6c_ann_pq_persistent", "n7_hybrid_rrf", "n8_ann_ivfpq_probes",
-    "n8b_ann_ivfpq_persistent", "n9_mmr_rerank", "o1_fee_sort",
-    "o1_sort_dispatch", "o2_offset_page", "o2b_cursor_newest",
+    "n8b_ann_ivfpq_persistent", "n9_mmr_rerank", "o2b_cursor_newest",
     "o2c_cursor_oldest", "o2d_cursor_completed", "o2e_cursor_fee",
-    "o2f_cursor_default", "o3_comparator_sort", "o4_custom_rank", "o5_topn",
-    "o6_snapshot_sort", "o7_topk_agg", "p1_ci_equality", "p2_in_list",
-    "p3_corrected_range", "p3b_warehouse_range", "p4_case_overlay",
-    "p5_nonnull_nonempty", "p6_fts_allcols", "p6_fts_multicol",
-    "p6_fts_overlap", "p6_fts_search", "p6c_fts_bm25", "p6f_fts_persistent",
-    "p7_point_lookup", "p8_substring_and", "p9_normalize_entry",
-    "q_agency_list", "q_agency_stats", "q_home_stats", "q_latest_entries",
-    "q_list_entries", "q_timeline", "s10_meta_kv", "s11_changelog_apply",
-    "s1_sync_drift", "s1b_sync_batch", "s2_parse_html",
-    "s2b_parse_quarantine", "s3_normalize_date", "s4_scan_project",
-    "s5_upsert_lww", "s6_fts_index", "s6b_fts_incremental",
-    "s7_export_manifest", "s7b_sqlite_dump", "s8_change_detect",
-    "s9_rss_items", "s9b_rss_document", "s9c_agency_feed", "u1_dedup_union",
-    "u2_anti_except", "u3_intersect", "zo1_zorder_key")
+    "o2f_cursor_default", "p3b_warehouse_range", "p6_fts_allcols",
+    "p6_fts_multicol", "p6_fts_overlap", "p6_fts_search", "p6c_fts_bm25",
+    "p6f_fts_persistent", "p9_normalize_entry", "q_agency_list",
+    "q_agency_stats", "q_home_stats", "q_latest_entries", "q_list_entries",
+    "q_timeline", "s1_sync_drift", "s1b_sync_batch", "s2_parse_html",
+    "s2b_parse_quarantine", "s6_fts_index", "s6b_fts_incremental",
+    "s7_export_manifest", "s7b_sqlite_dump", "s9_rss_items",
+    "s9b_rss_document", "s9c_agency_feed")
 
   test("the registered gate-query set matches its pin") {
     val names = SparkEntry.allDefs.map(_.name).sorted

@@ -24,6 +24,8 @@ class TextSpec extends AnyFunSuite {
     assert(Text.slugify("McDowell County Sheriff's Office") == "mcdowell-county-sheriffs-office")
     assert(Text.slugify("Café Bureau | Unit #9") == "caf-bureau-unit-9")
     assert(Text.slugify("---") == "")
+    // JS `\s` holds U+00A0 and U+2028; Java's `\s` does not
+    assert(Text.slugify("Dept\u00A0of\u2028Health") == "dept-of-health")
   }
 
   test("slugify is idempotent") {
@@ -73,6 +75,9 @@ class TextSpec extends AnyFunSuite {
     assert(Text.normalizeAgencyName("McDowell County Sheriff's Office", g) ==
       "McDowell County Sheriff's Office") // Mc-token preserved
     assert(Text.normalizeAgencyName("dept of education", g) == "Dept of Education")
+    // JS `\s+` collapse and `trim()` take U+00A0 and U+2028 too
+    assert(Text.normalizeAgencyName("\u00A0dept\u00A0of\u2028education\u2028", g) ==
+      "Dept of Education")
   }
 
   test("agencyIdentity produces (titlified name, slug) (shared.ts:14-19)") {
